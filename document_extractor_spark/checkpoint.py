@@ -16,21 +16,25 @@ Iceberg snapshot commit; the parquet manifest is the sandbox stand-in
 (SURVEY.md §4.4).
 
 Scale note: the manifest carries only (url, run_id) — at 10^12 docs it
-would itself be big, which is why the anti-join broadcasts *per-run*
-manifests and the production path is an Iceberg metadata predicate,
-not a data join. Here the anti-join is a shuffle-hash join Spark
-plans automatically with AQE.
+would itself be big, which is why the production path is an Iceberg
+metadata predicate, not a data join. Here the resume anti-join plans as
+``BroadcastHashJoin LeftAnti, BuildRight``: the manifest is broadcast
+to the pages scan. Once the manifest outgrows
+``spark.sql.autoBroadcastJoinThreshold`` it becomes a shuffle join.
 """
 from __future__ import annotations
 
-import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .config import PipelineConfig
-from .io_tables import iceberg_catalog, read_table, write_table
+from .io_tables import LOOKUP, iceberg_catalog, read_table, write_table
 from .pipeline import ExtractionResult, run_extraction
+
+MANIFEST_SCHEMA = "url string, run_id string"
 
 
 def _is_missing_path_error(exc: Exception) -> bool:
@@ -47,35 +51,32 @@ def _is_missing_path_error(exc: Exception) -> bool:
         "Path does not exist", "TABLE_OR_VIEW_NOT_FOUND"))
 
 
-def committed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    if iceberg_catalog(spark):
-        try:
-            return read_table(spark, "_manifest", out_dir)
-        except Exception as exc:  # table not created yet = nothing committed
-            if _is_missing_path_error(exc):
-                return None
-            raise
-    manifest = os.path.join(out_dir, "_manifest")
-    # read-probe instead of os.path checks: (a) out_dir may be a
-    # remote fs (hdfs://, s3a://) the driver's local os module cannot
-    # see — silently disabling resume; (b) a crash during the FIRST
-    # manifest write can leave only _temporary/ behind, which passes a
-    # listdir check but fails the parquet read forever after
+def committed_urls(spark: SparkSession, out_dir: str,
+                   catalog=LOOKUP) -> DataFrame | None:
+    """The committed manifest, or None when nothing is committed.
+
+    A read, not an os.path check: out_dir may be a remote fs (hdfs://,
+    s3a://) the driver's local os module cannot see. The parquet read
+    carries the manifest schema, so it runs no job: a missing path
+    fails here, and a dir holding only _temporary/ (a crash during the
+    FIRST manifest write) reads as empty. Any other failure (a corrupt
+    footer, a flaky store) surfaces in the batch's first job, before
+    any write — a flaky read must ABORT, not duplicate output on
+    re-run."""
     try:
-        df = spark.read.parquet(manifest)
-        df.take(1)
-        return df
-    except Exception as exc:  # absent or partial = nothing committed
+        return read_table(spark, "_manifest", out_dir, catalog,
+                          MANIFEST_SCHEMA)
+    except Exception as exc:  # absent = nothing committed
         if _is_missing_path_error(exc):
             return None
-        raise  # flaky read must ABORT, not duplicate output on re-run
+        raise
 
 
 def filter_uncommitted(
-    spark: SparkSession, pages: DataFrame, out_dir: str
+    spark: SparkSession, pages: DataFrame, out_dir: str, catalog=LOOKUP
 ) -> DataFrame:
     """Anti-join input vs the committed manifest (the resume filter)."""
-    manifest = committed_urls(spark, out_dir)
+    manifest = committed_urls(spark, out_dir, catalog)
     if manifest is None:
         return pages
     return pages.join(manifest.select("url"), "url", "left_anti")
@@ -99,26 +100,34 @@ def run_and_commit(
 
     cfg = cfg or PipelineConfig()
     log_phase("start", run_id=cfg.run_id, out_dir=out_dir)
-    # persist: without it the pages scan + manifest anti-join re-run
-    # three times (emptiness probe, the extraction job, the manifest
-    # write) — two full input re-reads per incremental batch
-    todo = filter_uncommitted(spark, pages, out_dir).persist()
+    catalog = iceberg_catalog(spark)  # one backend lookup per batch
+    # persist: the pages scan + manifest anti-join feed both the
+    # extraction and the manifest write; uncached, the input would be
+    # read twice per incremental batch
+    todo = filter_uncommitted(spark, pages, out_dir, catalog).persist()
+    result = None
     try:
-        if not todo.take(1):
+        result = run_extraction(spark, todo, cfg)
+        # ONE action fills both caches (todo under branches). Zero
+        # branch rows is a noise-only or an empty batch; only then
+        # does the emptiness probe run, over the filled todo cache
+        if not result.branches.count() and not todo.take(1):
             # noop stays write-free: a scheduler polling a quiet
             # input must not append a banner batch per poll
+            result.unpersist()
             log_phase("noop", run_id=cfg.run_id)
             return None
-        result = run_extraction(spark, todo, cfg)
         # io_tables routes each write to the configured Iceberg catalog
         # (atomic snapshot commits) or to parquet dirs under out_dir
-        write_table(result.extracted, "extracted", out_dir)
-        write_table(result.quarantine, "quarantine", out_dir)
-        write_table(result.metrics, "metrics", out_dir)
+        _write_concurrently(spark, out_dir, catalog, {
+            "extracted": result.extracted,
+            "quarantine": result.quarantine,
+            "metrics": result.metrics,
+        })
         # commit point: manifest written last, after all data lands
         write_table(
             todo.select("url").withColumn("run_id", F.lit(cfg.run_id)),
-            "_manifest", out_dir)
+            "_manifest", out_dir, catalog=catalog)
         # O2: the effective-config banner (entrypoint.sh:69-88) —
         # AFTER the manifest commit, so a params row implies the
         # batch it describes actually committed: a mid-run failure
@@ -126,8 +135,31 @@ def run_and_commit(
         # (which re-runs the whole batch) writes the set exactly
         # once. The narrow crash window between manifest and banner
         # loses only the banner, never data integrity.
-        write_table(job_params_table(spark, cfg), "job_params", out_dir)
+        write_table(job_params_table(spark, cfg), "job_params", out_dir,
+                    catalog=catalog)
         log_phase("commit", run_id=cfg.run_id)
         return result
+    except BaseException:
+        if result is not None:  # never handed to the caller
+            result.unpersist()
+        raise
     finally:
         todo.unpersist()
+
+
+def _write_concurrently(spark: SparkSession, out_dir: str, catalog,
+                        tables: dict[str, DataFrame]) -> None:
+    """Append independent tables from one thread each, so their short
+    jobs over the filled branch cache share the cores instead of
+    queueing. Each thread keeps the caller's local properties (job
+    group, scheduler pool). Returns once every write has finished;
+    then re-raises the first failure, in ``tables`` order."""
+    with ThreadPoolExecutor(len(tables)) as pool:
+        # one wrapper per table: each clones the caller's properties,
+        # so a thread that relabels its job group touches only its own
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_table),
+                        df, name, out_dir, catalog=catalog)
+            for name, df in tables.items()]
+    for f in futures:
+        f.result()

@@ -26,6 +26,8 @@ ICEBERG_CATALOG_IMPLS = (
     "org.apache.iceberg.spark.SparkCatalog",
     "org.apache.iceberg.spark.SparkSessionCatalog",
 )
+# catalog= default of the table ops: look the backend up per call
+LOOKUP = object()
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -33,7 +35,9 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
 
     Reads ``SET`` output rather than SparkContext's frozen conf so
     catalogs registered either at spark-submit time (--conf) or at
-    runtime (spark.conf.set) are both seen.
+    runtime (spark.conf.set) are both seen. Each call is a SQL command
+    round trip (tens of ms): a caller issuing several table ops in a
+    row resolves it once and passes ``catalog=`` to each.
     """
     prefix = "spark.sql.catalog."
     for row in spark.sql("SET").collect():
@@ -71,13 +75,15 @@ def _local_root(root: str) -> str:
 
 
 def write_table(df: DataFrame, name: str, root: str,
-                mode: str = "append") -> str:
+                mode: str = "append", catalog=LOOKUP) -> str:
     """Write `df` as table `name`; returns the identifier written.
 
     Iceberg: ``<catalog>.<name>`` via writeTo (snapshot commit).
     Parquet: ``<root>/<name>`` directory (append/overwrite files).
+    ``catalog``: an already-resolved :func:`iceberg_catalog` result
+    (None = parquet); looked up from the session when omitted.
     """
-    cat = iceberg_catalog(df.sparkSession)
+    cat = iceberg_catalog(df.sparkSession) if catalog is LOOKUP else catalog
     if cat:
         ident = f"{cat}.{name}"
         writer = df.writeTo(ident)
@@ -107,11 +113,16 @@ def write_table(df: DataFrame, name: str, root: str,
     return path
 
 
-def read_table(spark: SparkSession, name: str, root: str) -> DataFrame:
-    cat = iceberg_catalog(spark)
+def read_table(spark: SparkSession, name: str, root: str,
+               catalog=LOOKUP, schema: str | None = None) -> DataFrame:
+    """Read table `name` (``catalog`` as in :func:`write_table`).
+    ``schema`` pins a parquet read's schema, so no footer-inference
+    job runs; the Iceberg table carries its own."""
+    cat = iceberg_catalog(spark) if catalog is LOOKUP else catalog
     if cat:
         return spark.read.table(f"{cat}.{name}")
-    return spark.read.parquet(f"{root}/{name}")
+    reader = spark.read.schema(schema) if schema else spark.read
+    return reader.parquet(f"{root}/{name}")
 
 
 def recover_table(name: str, root: str) -> None:

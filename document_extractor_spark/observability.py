@@ -118,6 +118,11 @@ def job_params_rows(spark: SparkSession,
 def job_params_table(spark: SparkSession,
                      cfg: PipelineConfig) -> DataFrame:
     """O2 as a DataFrame — written next to the metrics table by
-    run_and_commit; dim-bounded (a few dozen rows per run)."""
+    run_and_commit; dim-bounded (a few dozen rows per run). Built from
+    pandas, so the rows cross to the JVM as one Arrow batch."""
+    import pandas as pd
+
     return spark.createDataFrame(
-        job_params_rows(spark, cfg), JOB_PARAMS_SCHEMA)
+        pd.DataFrame(job_params_rows(spark, cfg),
+                     columns=["run_id", "key", "value"]),
+        JOB_PARAMS_SCHEMA)

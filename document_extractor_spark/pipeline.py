@@ -34,7 +34,8 @@ Scale notes (100 TB design):
   the three sinks, so extracted/quarantine/metrics share one pass.
   The persisted stream carries extracted text, never input binaries.
 - The only shuffles in the whole job: the optional url-hash
-  repartition and the metrics groupBy (tiny).
+  repartition and the metrics groupBy (one aggregate over the branch
+  stream, no join; one row per partition).
 - AQE handles post-explode page-row skew from big documents.
 """
 from __future__ import annotations
@@ -42,7 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
@@ -219,12 +220,12 @@ def _staged_branches(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
             .unionByName(gzip_out).unionByName(img_out))
 
 
-def granularity_project(branches: DataFrame, run_id: str) -> DataFrame:
-    """A7 granularity switch + E12 page-concat in ONE pass: per-doc
-    rows become a single synthetic whole-doc page struct, then
-    everything explodes.  Shared VERBATIM by the batch pipeline and
-    the streaming plan (extracted_stream) — stream==batch depends on
-    these being the same expressions, so there is exactly one copy."""
+def pages_repr() -> Column:
+    """A7 granularity switch + E12 page-concat as ONE array column:
+    per-page rows keep their pages, per-doc rows become a single
+    synthetic whole-doc page struct. granularity_project explodes it
+    and run_extraction's metrics count and measure it, so the
+    granularity semantics live here once."""
     doc_struct = F.struct(
         F.lit(None).cast("int").alias("page"),
         F.when(
@@ -234,15 +235,22 @@ def granularity_project(branches: DataFrame, run_id: str) -> DataFrame:
         ).otherwise(F.lit(None)).alias("text"),  # E12 "\n".join contract
         F.col("reliability").alias("reliability"),
     )
-    pages_repr = F.when(F.col("per_page"), F.col("pages")).otherwise(
+    return F.when(F.col("per_page"), F.col("pages")).otherwise(
         F.array(doc_struct))
+
+
+def granularity_project(branches: DataFrame, run_id: str) -> DataFrame:
+    """Explode pages_repr() into extracted rows in ONE pass.  Shared
+    VERBATIM by the batch pipeline and the streaming plan
+    (extracted_stream) — stream==batch depends on these being the same
+    expressions, so there is exactly one copy."""
     return (
         branches.filter(F.col("fmt") != FMT_UNSUPPORTED)
         .select(
             "url", "lang", "fmt", "method", "status", "used_fallback",
             F.col("n_pages").alias("pages"), "spans", "error",
             F.col("reliability").alias("doc_reliability"),
-            F.explode_outer(pages_repr).alias("p"),
+            F.explode_outer(pages_repr()).alias("p"),
         )
         .select(
             "url",
@@ -299,25 +307,30 @@ def run_extraction(
     )
 
     # --- per-partition lineage counters (north_rule) -------------------------
-    metrics_in = branches.groupBy(
-        F.spark_partition_id().alias("partition_id")
-    ).agg(F.count("*").alias("docs_in"))
-    metrics_out = extracted.groupBy(
+    # ONE aggregate over the branch stream: each kept branch row
+    # explodes into max(1, size(pages_repr)) extracted rows (the
+    # explode_outer rule), all carrying its status, so the extracted
+    # counters are sums over branch rows. The explode is narrow, so
+    # spark_partition_id() matches the extracted rows' partition. A
+    # partition without kept rows reads NULL, as a join would leave it.
+    kept = F.col("fmt") != FMT_UNSUPPORTED
+    out_pages = pages_repr()
+    rows_out = F.greatest(F.coalesce(F.size(out_pages), F.lit(0)),
+                          F.lit(1)).cast("long")
+    text_bytes = F.coalesce(F.aggregate(
+        out_pages, F.lit(0).cast("long"),
+        lambda acc, p: acc + F.coalesce(F.octet_length(p["text"]),
+                                        F.lit(0))), F.lit(0))
+    metrics = branches.groupBy(
         F.spark_partition_id().alias("partition_id")
     ).agg(
-        F.count("*").alias("docs_out"),
-        F.sum((F.col("status") == "ERROR").cast("long"))
-        .alias("parse_failures"),
-        F.sum(F.coalesce(F.octet_length("text"), F.lit(0)).cast("long"))
-        .alias("bytes_extracted"),
-    )
-    metrics = (
-        metrics_in.join(metrics_out, "partition_id", "full_outer")
-        .select(
-            F.lit(cfg.run_id).alias("run_id"),
-            "partition_id", "docs_in", "docs_out", "parse_failures",
-            "bytes_extracted")
-    )
+        F.count("*").alias("docs_in"),
+        F.sum(F.when(kept, rows_out)).alias("docs_out"),
+        F.sum(F.when(kept, rows_out * (F.col("status") == "ERROR")
+                     .cast("long"))).alias("parse_failures"),
+        F.sum(F.when(kept, text_bytes)).alias("bytes_extracted"),
+    ).select(F.lit(cfg.run_id).alias("run_id"), "partition_id", "docs_in",
+             "docs_out", "parse_failures", "bytes_extracted")
 
     return ExtractionResult(extracted, quarantine, metrics,
                             branches if persist else None)

@@ -57,5 +57,9 @@ def build_session(
         # re-assert the same value via __spark_entry__._pin_utc).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture per Column call (about five
+        # py4j round trips each); error messages lose only the
+        # DataFrame query context
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

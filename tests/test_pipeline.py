@@ -105,6 +105,64 @@ def test_metrics_counters(corpus, extraction):
     assert met.bytes_extracted.sum() == want_bytes
 
 
+def _join_metrics(res, run_id):
+    """The per-partition metrics as two aggregates plus a full-outer
+    join: the reference the one-aggregate metrics must equal."""
+    metrics_in = res.branches.groupBy(
+        F.spark_partition_id().alias("partition_id")
+    ).agg(F.count("*").alias("docs_in"))
+    metrics_out = res.extracted.groupBy(
+        F.spark_partition_id().alias("partition_id")
+    ).agg(
+        F.count("*").alias("docs_out"),
+        F.sum((F.col("status") == "ERROR").cast("long"))
+        .alias("parse_failures"),
+        F.sum(F.coalesce(F.octet_length("text"), F.lit(0)).cast("long"))
+        .alias("bytes_extracted"),
+    )
+    return metrics_in.join(metrics_out, "partition_id", "full_outer").select(
+        F.lit(run_id).alias("run_id"), "partition_id", "docs_in",
+        "docs_out", "parse_failures", "bytes_extracted")
+
+
+def test_metrics_equal_join_reference(spark, pages_df, corpus):
+    """Row for row per partition, on the golden corpus and on an input
+    with a partition of only unsupported rows, whose extracted
+    counters are NULL."""
+    from document_extractor_spark.config import PipelineConfig
+    from document_extractor_spark.pipeline import run_extraction
+
+    # no url-hash bucketing: keep the partitions built below
+    cfg = PipelineConfig(bigdoc_page_limit=6, url_hash_buckets=-1)
+    q = corpus.expected_quarantine
+    bad = F.col("url").isin(list(q[q.reason == "unsupported"].url))
+    # two partitions: the unsupported rows, then 40 others (an RDD
+    # partitioner, which AQE cannot coalesce)
+    keyed = (pages_df.filter(bad).union(pages_df.filter(~bad).limit(40))
+             .select(F.when(bad, 0).otherwise(1).alias("k"), "*").rdd)
+    mixed = spark.createDataFrame(
+        keyed.map(lambda r: (r[0], r[1:])).partitionBy(2, lambda k: k)
+        .values(), pages_df.schema)
+    for pages, null_partitions in ((pages_df, 0), (mixed, 1)):
+        res = run_extraction(spark, pages, cfg)
+        try:
+            cols = res.metrics.columns
+            got = res.metrics.toPandas().sort_values(
+                "partition_id", ignore_index=True)
+            want = _join_metrics(res, cfg.run_id).toPandas()[cols] \
+                .sort_values("partition_id", ignore_index=True)
+        finally:
+            res.unpersist()
+        # names and types; parquet writes every column nullable
+        assert [(f.name, f.dataType) for f in res.metrics.schema] == [
+            (f.name, f.dataType)
+            for f in _join_metrics(res, cfg.run_id).select(cols).schema]
+        pd.testing.assert_frame_equal(got, want)
+        assert got.docs_out.isna().sum() == null_partitions
+        assert got[got.docs_out.isna()][
+            ["parse_failures", "bytes_extracted"]].isna().all().all()
+
+
 def test_job_params_banner_row(spark, pages_df, cfg, tmp_path):
     """O2 (entrypoint.sh:69-88 analog): every run_and_commit writes a
     queryable job_params table with the EFFECTIVE config, the
@@ -295,6 +353,70 @@ def test_noop_rerun_writes_nothing(spark, pages_df, cfg, tmp_path):
     before = _snapshot(out)
     assert run_and_commit(spark, sub, out, cfg) is None
     assert _snapshot(out) == before
+
+
+def test_noise_only_batch_still_commits(spark, pages_df, corpus, cfg,
+                                        tmp_path):
+    """Noise rows leave no branch rows, yet their batch is not a no-op:
+    the urls are committed, so the next run skips them."""
+    from document_extractor_spark.checkpoint import run_and_commit
+
+    out = str(tmp_path / "out")
+    noise = pages_df.filter(F.col("url").isin(corpus.noise_urls)).cache()
+    assert noise.count() > 0
+    result = run_and_commit(spark, noise, out, cfg)
+    assert result is not None
+    result.unpersist()
+    assert spark.read.parquet(os.path.join(out, "extracted")).count() == 0
+    committed = spark.read.parquet(os.path.join(out, "_manifest"))
+    assert sorted(r.url for r in committed.collect()) == sorted(
+        corpus.noise_urls)
+    assert run_and_commit(spark, noise, out, cfg) is None
+
+
+def test_corrupt_manifest_aborts_and_writes_nothing(spark, pages_df, cfg,
+                                                   tmp_path):
+    """A manifest file that exists but cannot be read is not 'nothing
+    committed': the batch raises before any table write."""
+    from document_extractor_spark.checkpoint import run_and_commit
+
+    out = str(tmp_path / "out")
+    sub = pages_df.limit(10).cache()
+    assert run_and_commit(spark, sub.limit(5), out, cfg) is not None
+    with open(os.path.join(out, "_manifest", "part-corrupt.parquet"),
+              "wb") as f:
+        f.write(b"PAR1" + b"\0" * 64 + b"PAR1")
+
+    def _snapshot(root):
+        return sorted((os.path.join(d, f), os.path.getsize(
+            os.path.join(d, f))) for d, _, fs in os.walk(root) for f in fs)
+
+    before = _snapshot(out)
+    with pytest.raises(Exception, match="part-corrupt"):
+        run_and_commit(spark, sub, out, cfg)
+    assert _snapshot(out) == before
+
+
+def test_commit_jobs_keep_callers_job_group(spark, pages_df, cfg, tmp_path):
+    """Every job of one run_and_commit, the threaded sink writes
+    included, runs under the caller's job group."""
+    from document_extractor_spark.checkpoint import run_and_commit
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sub = pages_df.limit(12).cache()
+    sub.count()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("commit-group", "run_and_commit under a job group")
+    try:
+        res = run_and_commit(spark, sub, str(tmp_path / "out"), cfg)
+        res.unpersist()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    # the three data sinks, the manifest and job_params at least
+    assert len(tracker.getJobIdsForGroup("commit-group")) >= 5
 
 
 def test_office_salvage_env_bool(monkeypatch):
