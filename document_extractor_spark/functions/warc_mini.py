@@ -34,7 +34,8 @@ Reference analog: the reference watches a directory of already-split
 files (process_run.py:35-52) and never parses containers itself; the
 WARC source is the Spark-native generalization — one binary column
 row per WARC file, exploded into per-record rows by an Arrow-batched
-kernel (operators/container.py holds the zip/gzip analog).
+kernel (operators/extract_branches.py holds the portfolio/gzip
+analog).
 """
 from __future__ import annotations
 

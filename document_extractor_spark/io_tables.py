@@ -263,8 +263,8 @@ def cleanup_run_dir(run_dir: str, input_root: str) -> dict:
     removal preconditions are re-checked on the resolved paths so a
     symlinked or mis-joined run_dir cannot delete outside the input
     root. The reference's portfolio stash pruning has no analog:
-    container children are exploded in-memory (operators/container),
-    never stashed to disk."""
+    container children are dispatched in-memory by the extraction
+    kernel (operators/extract_branches), never stashed to disk."""
     import os
     from pathlib import Path
 

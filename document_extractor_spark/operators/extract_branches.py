@@ -1,16 +1,16 @@
-"""Per-format extraction branches as Arrow-batched mapInPandas stages.
+"""Per-format extraction cores and the fused Arrow-batched dispatcher.
 
-Each branch yields the common intermediate schema ``BRANCH_SCHEMA``
-(url, method, status, page structs, spans, doc reliability, ...) which
-the pipeline unions (reference analog: every pass appends rows to the
-same run CSV via output_writer.write_result, output_writer.py:119-257).
+Every core yields one row of the common intermediate schema
+``BRANCH_SCHEMA`` (url, method, status, page structs, spans, doc
+reliability, ...) — the reference analog is every pass appending rows
+to the same run CSV via output_writer.write_result
+(output_writer.py:119-257). ``make_extract_any`` runs them all inside
+ONE mapInPandas stage, dispatching per row on the JVM-sniffed fmt.
 
-The HTML cascade carries the binary payload through each stage output
-(nulled on acceptance) so the next stage can run on the remainder with
-a narrow filter — no shuffle, no re-read; Spark never invokes the
-expensive stage-k parse on rows accepted at stage k-1. This is the
-structural twin of the reference's TXT -> OCR-A -> OCR-B escalation
-(pass_pdf.py:112-255) expressed as dataflow (SURVEY.md §4).
+The HTML core is the strict -> lenient -> raw cascade, short-circuited
+per row: the reference's TXT -> OCR-A -> OCR-B escalation
+(pass_pdf.py:112-255, SURVEY.md §4) with no stage ever run on a row an
+earlier stage accepted.
 """
 from __future__ import annotations
 
@@ -29,13 +29,7 @@ from ..functions.scoring import (
 from ..functions.doc_mini import DocParseError, doc_text, doc_text_lenient
 from ..functions.docx_mini import DOCX_MARKER, docx_text, docx_text_lenient
 from ..functions.textnorm import decode_detect, decode_reference
-from .html_extract import (
-    StrictParseError,
-    classify_blocks,
-    extract_html,
-    extract_raw,
-    parse_blocks_observed,
-)
+from .html_extract import extract_html, extract_raw
 
 # common intermediate row produced by every branch
 BRANCH_SCHEMA = (
@@ -46,8 +40,6 @@ BRANCH_SCHEMA = (
     "spans array<struct<start:bigint,end:bigint>>, "
     "reliability double, error string"
 )
-# cascade stages additionally carry the payload for the remainder rows
-CASCADE_SCHEMA = BRANCH_SCHEMA + ", html binary, accepted boolean"
 
 _BRANCH_COLS = [
     "url", "warc_ts", "lang", "fmt", "method", "status", "used_fallback",
@@ -96,13 +88,15 @@ def _row(url, warc_ts, lang, fmt, method, status, used_fallback,
     }
 
 
-def _empty(cols=None) -> pd.DataFrame:
-    return pd.DataFrame(columns=cols or _BRANCH_COLS)
+def _error_row(url, warc_ts, lang, fmt, method, error) -> dict:
+    """A failed doc: no pages, no spans, reliability 0, no fallback."""
+    return _row(url, warc_ts, lang, fmt, method, "ERROR", False, False, 0,
+                [], [], 0.0, error)
 
 
 # --------------------------------------------------------------------------
-# per-row extraction cores (shared by the staged branches below and the
-# fused single-pass dispatcher)
+# per-row extraction cores, one per format, called by the fused
+# dispatcher below
 # --------------------------------------------------------------------------
 def _txt_core(url, warc_ts, lang, fmt, html, text) -> dict:
     if fmt == "pretext":
@@ -129,13 +123,12 @@ def _img_core(url, warc_ts, lang, payload, cfg: PipelineConfig) -> dict:
     from .ocr import ocr_page
 
     if not _has_workdir_space(cfg):  # R6: fail before OCR, not after
-        return _row(url, warc_ts, lang, "img", "none", "ERROR",
-                    False, False, 0, [], [], 0.0, _LOW_DISK_ERROR)
+        return _error_row(url, warc_ts, lang, "img", "none", _LOW_DISK_ERROR)
     text, method, status = ocr_page(
         bytes(payload) if payload is not None else None)
     if text is None:
-        return _row(url, warc_ts, lang, "img", "none", "ERROR",
-                    False, False, 0, [], [], 0.0, "img_parse_failed")
+        return _error_row(url, warc_ts, lang, "img", "none",
+                          "img_parse_failed")
     rel = score_reliability(text)
     fallback = method == "ocr_b"
     if status == "OK" and text.strip() and rel >= cfg.img_cutoff:
@@ -148,6 +141,17 @@ def _img_core(url, warc_ts, lang, payload, cfg: PipelineConfig) -> dict:
                 False, 0, [], [], rel, reason)
 
 
+def _paged(texts: list[str], rels: list[float]) -> tuple[list, list]:
+    """Page structs, and each page's (start, end) offsets in the
+    "\n"-joined doc text (E12 join contract)."""
+    pages = [(i + 1, t, rel) for i, (t, rel) in enumerate(zip(texts, rels))]
+    spans, off = [], 0
+    for t in texts:
+        spans.append((off, off + len(t)))
+        off += len(t) + 1  # the joining "\n"
+    return pages, spans
+
+
 def _pdf_core(url, warc_ts, lang, payload, cfg: PipelineConfig,
               doc=None) -> dict:
     # `doc`: an already-parsed PdfDoc (the fused container probe has
@@ -155,9 +159,8 @@ def _pdf_core(url, warc_ts, lang, payload, cfg: PipelineConfig,
     # never pay it twice for the same payload
     doc = doc if doc is not None else parse_pdf(payload)
     if not doc.ok:
-        return _row(url, warc_ts, lang, "pdf", "pdf_text", "ERROR",
-                    False, False, 0, [], [], 0.0,
-                    f"pdf_parse_failed: {doc.error}")
+        return _error_row(url, warc_ts, lang, "pdf", "pdf_text",
+                          f"pdf_parse_failed: {doc.error}")
     n = doc.n_pages
     per_page = (len(payload) >= cfg.bigdoc_size_limit_bytes
                 or n >= cfg.bigdoc_page_limit)  # pass_pdf.py:108-110
@@ -182,12 +185,7 @@ def _pdf_core(url, warc_ts, lang, payload, cfg: PipelineConfig,
         return _row(url, warc_ts, lang, "pdf", "pdf_text", "ERROR",
                     False, per_page, n, [], [], med,
                     f"pdf_below_cutoff: median={med:.4f}")
-    pages = [(i + 1, t, rel)
-             for i, (t, rel) in enumerate(zip(doc.page_texts, rels))]
-    spans, off = [], 0
-    for t in doc.page_texts:
-        spans.append((off, off + len(t)))
-        off += len(t) + 1  # the joining "\n"
+    pages, spans = _paged(doc.page_texts, rels)
     return _row(url, warc_ts, lang, "pdf", "pdf_text", "OK",
                 False, per_page, n, pages, spans, med)
 
@@ -210,12 +208,7 @@ def _pdf_ocr_cascade(url, warc_ts, lang, doc, cfg: PipelineConfig) -> dict:
         med = exact_median(rels)
         if med < cutoff:
             return None, med
-        pages = [(i + 1, t, rel)
-                 for i, (t, rel) in enumerate(zip(texts, rels))]
-        spans, off = [], 0
-        for t in texts:
-            spans.append((off, off + len(t)))
-            off += len(t) + 1
+        pages, spans = _paged(texts, rels)
         return _row(url, warc_ts, lang, "pdf", method, "OK", fallback,
                     True, n, pages, spans, med), med
 
@@ -267,9 +260,8 @@ def _docx_core(url, warc_ts, lang, payload, cfg: PipelineConfig) -> dict:
     try:
         t = docx_text(payload)
     except Exception as exc:
-        return _row(url, warc_ts, lang, "docx", "doc_extract_error",
-                    "ERROR", False, False, 0, [], [], 0.0,
-                    f"docx_open_failed: {exc}")
+        return _error_row(url, warc_ts, lang, "docx", "doc_extract_error",
+                          f"docx_open_failed: {exc}")
     rel = score_reliability(t)
     if t.strip() and rel >= cfg.docx_cutoff:
         return _row(url, warc_ts, lang, "docx", "docx_text", "OK",
@@ -299,16 +291,13 @@ def _doc_core(url, warc_ts, lang, payload, cfg: PipelineConfig) -> dict:
             # fmt 'unsupported', NOT 'doc': a deny-listed CFB (.xls,
             # .ppt) must get the same treatment as a deny-listed zip
             # (.xlsx) — quarantine only, never an extracted-table row
-            return _row(url, warc_ts, lang, "unsupported", "none",
-                        "ERROR", False, False, 0, [], [], 0.0,
-                        "unsupported")
-        return _row(url, warc_ts, lang, "doc", "doc_extract_error",
-                    "ERROR", False, False, 0, [], [], 0.0,
-                    f"doc_open_failed: {exc}")
+            return _error_row(url, warc_ts, lang, "unsupported", "none",
+                              "unsupported")
+        return _error_row(url, warc_ts, lang, "doc", "doc_extract_error",
+                          f"doc_open_failed: {exc}")
     except Exception as exc:
-        return _row(url, warc_ts, lang, "doc", "doc_extract_error",
-                    "ERROR", False, False, 0, [], [], 0.0,
-                    f"doc_open_failed: {exc}")
+        return _error_row(url, warc_ts, lang, "doc", "doc_extract_error",
+                          f"doc_open_failed: {exc}")
     rel = score_reliability(t)
     if t.strip() and rel >= cfg.doc_cutoff:
         return _row(url, warc_ts, lang, "doc", "doc_text", "OK",
@@ -328,19 +317,16 @@ def _html_core(url, warc_ts, lang, payload, cfg: PipelineConfig) -> dict:
     circuit on first acceptance — the reference's escalation
     semantics, pass_pdf.py:112-255, fused into a single pass).
 
-    The DOM is parsed ONCE in observed mode: a strictly-valid
-    document's lenient block sequence is identical to its strict one,
-    so strict acceptance only needs the violation flag — this removes
-    the strict-then-lenient double parse (~20% of html kernel time on
-    noisy corpora; fused==staged pytest pins the equivalence).
+    The DOM is parsed ONCE (extract_html): a strictly-valid document's
+    lenient block sequence is identical to its strict one, so strict
+    acceptance only needs the violation flag — this removes the
+    strict-then-lenient double parse (~20% of html kernel time on
+    noisy corpora; the golden tables pin every row's method).
     """
     source, _charset = decode_detect(payload)
-    blocks, violation = parse_blocks_observed(source)
-    kept = classify_blocks(
-        blocks, cfg.min_block_chars, cfg.max_link_density,
+    text, spans, violation = extract_html(
+        source, cfg.min_block_chars, cfg.max_link_density,
         cfg.min_stopword_ratio)
-    text = "\n".join(b.text for b in kept)  # E12 join contract
-    spans = [(int(b.start), int(b.end)) for b in kept]
     rel = score_reliability(text)
     if text.strip():
         if violation is None and rel >= cfg.html_strict_cutoff:
@@ -360,149 +346,13 @@ def _html_core(url, warc_ts, lang, payload, cfg: PipelineConfig) -> dict:
 
 
 # --------------------------------------------------------------------------
-# txt branch (reference pass_txt.py): lossy utf-8 decode, whole text is
-# page 1, always "succeeds" (status ERROR only when empty — rc is 0 either
-# way, so txt rows are never quarantined).
-# --------------------------------------------------------------------------
-def make_txt_branch(cfg: PipelineConfig):
-    def txt_branch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = [
-                _txt_core(r.url, r.warc_ts, r.lang, r.fmt, r.html, r.text)
-                for r in pdf_batch.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=_BRANCH_COLS) if out else _empty()
-
-    return txt_branch
-
-
-# --------------------------------------------------------------------------
-# pdf branch (reference pass_pdf.py + pass_pdf_txt.py): native text layer,
-# scan-only triage, exact-median gating, per-doc/per-page granularity.
-# --------------------------------------------------------------------------
-def make_docx_branch(cfg: PipelineConfig):
-    """Staged-path DOCX branch (reference pass_doc.py dispatch,
-    process_run.py:103)."""
-    def docx_branch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = [
-                _docx_core(r.url, r.warc_ts, r.lang, r.html, cfg)
-                for r in pdf_batch.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=_BRANCH_COLS) if out else _empty()
-
-    return docx_branch
-
-
-def make_doc_branch(cfg: PipelineConfig):
-    """Staged-path legacy .doc branch (reference pass_doc.py dispatch,
-    process_run.py:104)."""
-    def doc_branch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = [
-                _doc_core(r.url, r.warc_ts, r.lang, r.html, cfg)
-                for r in pdf_batch.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=_BRANCH_COLS) if out else _empty()
-
-    return doc_branch
-
-
-def make_pdf_branch(cfg: PipelineConfig):
-    def pdf_branch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = [
-                _pdf_core(r.url, r.warc_ts, r.lang, r.html, cfg)
-                for r in pdf_batch.itertuples(index=False)
-            ]
-            yield pd.DataFrame(out, columns=_BRANCH_COLS) if out else _empty()
-
-    return pdf_branch
-
-
-# --------------------------------------------------------------------------
-# html cascade stages (SURVEY.md M3): strict -> lenient -> raw, each an
-# independent mapInPandas over the previous stage's remainder.
-# --------------------------------------------------------------------------
-_CASCADE_COLS = _BRANCH_COLS + ["html", "accepted"]
-
-_STAGES = {
-    "strict": ("html_text", False),
-    "lenient": ("html_lenient", True),
-    "raw": ("html_raw", True),
-}
-
-
-def make_html_stage(cfg: PipelineConfig, stage: str, final: bool = False):
-    method, fallback = _STAGES[stage]
-    cutoff = {
-        "strict": cfg.html_strict_cutoff,
-        "lenient": cfg.html_lenient_cutoff,
-        "raw": cfg.html_raw_cutoff,
-    }[stage]
-    min_chars, max_ld = cfg.min_block_chars, cfg.max_link_density
-    min_sw = cfg.min_stopword_ratio
-
-    def html_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = []
-            for r in pdf_batch.itertuples(index=False):
-                payload = r.html
-                source, _charset = decode_detect(payload)
-                text, spans, err = "", [], ""
-                try:
-                    if stage == "raw":
-                        text = extract_raw(source)
-                        spans = []
-                    else:
-                        text, spans = extract_html(
-                            source, strict=(stage == "strict"),
-                            min_block_chars=min_chars,
-                            max_link_density=max_ld,
-                            min_stopword_ratio=min_sw)
-                except StrictParseError as exc:
-                    err = f"strict_parse: {exc}"
-                rel = score_reliability(text)
-                accepted = not err and rel >= cutoff and bool(text.strip())
-                if accepted:
-                    row = _row(
-                        r.url, r.warc_ts, r.lang, "html", method, "OK",
-                        fallback, False, 1,
-                        [(1, text, rel)],
-                        [(int(s), int(e)) for s, e in spans], rel)
-                    row["html"] = None
-                elif final:
-                    row = _row(
-                        r.url, r.warc_ts, r.lang, "html", method, "ERROR",
-                        fallback, False, 0, [], [], rel,
-                        err or f"extract_below_cutoff: rel={rel:.4f}")
-                    row["html"] = None
-                else:
-                    row = _row(
-                        r.url, r.warc_ts, r.lang, "html", method,
-                        "ESCALATE", fallback, False, 0, [], [], rel, err)
-                    row["html"] = payload  # carry payload to next stage
-                row["accepted"] = accepted
-                out.append(row)
-            yield (pd.DataFrame(out, columns=_CASCADE_COLS)
-                   if out else _empty(_CASCADE_COLS))
-
-    return html_stage
-
-
-# --------------------------------------------------------------------------
-# fused single-pass dispatcher — the performance path.
+# fused single-pass dispatcher.
 #
-# The staged branches above are the *structural* expression of the
-# reference's cascade; but expressed as separate DataFrames, every
-# consumer (cascade remainder, doc/page split, quarantine, metrics)
-# re-executes the upstream Python stages. The escalation decision is
-# per-row and data-dependent, so the idiomatic-Spark answer is ONE
-# Arrow stage that dispatches on the (JVM-computed) fmt column and
-# short-circuits the cascade per row: one scan, one Python stage,
-# zero duplicate work. Containers recurse inline (depth 1), so child
-# docs never need a second dispatch pass. Tests assert fused ==
-# staged row-for-row.
+# The escalation decision is per-row and data-dependent, so the
+# idiomatic-Spark answer is ONE Arrow stage that dispatches on the
+# (JVM-computed) fmt column and short-circuits the cascade per row:
+# one scan, one Python stage, zero duplicate work. Containers recurse
+# inline (depth 1), so child docs never need a second dispatch pass.
 # --------------------------------------------------------------------------
 def sniff_bytes(html: bytes | None, text: str | None) -> str:
     """Python twin of functions/sniff.sniff_format (same routing)."""
@@ -532,16 +382,14 @@ def sniff_bytes(html: bytes | None, text: str | None) -> str:
     return "unsupported"
 
 
-def make_extract_any(cfg: PipelineConfig, allow_container: bool = True):
-    from ..functions.pdf_mini import parse_pdf as _parse  # container probe
-
+def make_extract_any(cfg: PipelineConfig):
     def _dispatch_one(url, warc_ts, lang, fmt, html, text, out: list,
                       allow_container: bool = True) -> None:
         if fmt == "noise":
             return  # deleted on sight (process_run.py:158-164)
         if fmt == "unsupported":
-            out.append(_row(url, warc_ts, lang, fmt, "none", "ERROR",
-                            False, False, 0, [], [], 0.0, "unsupported"))
+            out.append(_error_row(url, warc_ts, lang, fmt, "none",
+                                  "unsupported"))
             return
         if fmt in ("txt", "pretext"):
             out.append(_txt_core(url, warc_ts, lang, fmt, html, text))
@@ -576,25 +424,22 @@ def make_extract_any(cfg: PipelineConfig, allow_container: bool = True):
             try:
                 inner = d.decompress(html, cap + 1)
             except Exception as exc:
-                out.append(_row(url, warc_ts, lang, "gzip", "none",
-                                "ERROR", False, False, 0, [], [], 0.0,
-                                f"gzip_corrupt: {exc}"))
+                out.append(_error_row(url, warc_ts, lang, "gzip", "none",
+                                      f"gzip_corrupt: {exc}"))
                 return
             if len(inner) > cap:
-                out.append(_row(url, warc_ts, lang, "gzip", "none",
-                                "ERROR", False, False, 0, [], [], 0.0,
-                                f"gzip_too_large: decompressed > {cap} bytes"))
+                out.append(_error_row(
+                    url, warc_ts, lang, "gzip", "none",
+                    f"gzip_too_large: decompressed > {cap} bytes"))
                 return
             if not d.eof:
-                out.append(_row(url, warc_ts, lang, "gzip", "none",
-                                "ERROR", False, False, 0, [], [], 0.0,
-                                "gzip_corrupt: truncated stream"))
+                out.append(_error_row(url, warc_ts, lang, "gzip", "none",
+                                      "gzip_corrupt: truncated stream"))
                 return
             ifmt = sniff_bytes(inner, None)
             if ifmt == "gzip":
-                out.append(_row(url, warc_ts, lang, "gzip", "none",
-                                "ERROR", False, False, 0, [], [], 0.0,
-                                "gzip_nested"))
+                out.append(_error_row(url, warc_ts, lang, "gzip", "none",
+                                      "gzip_nested"))
                 return
             _dispatch_one(url, warc_ts, lang, ifmt, inner, None, out,
                           allow_container=allow_container)
@@ -603,7 +448,7 @@ def make_extract_any(cfg: PipelineConfig, allow_container: bool = True):
         probed = None
         if allow_container and html is not None \
                 and b"/EmbeddedFile" in html:
-            probed = _parse(html)
+            probed = parse_pdf(html)
             if probed.attachments:
                 for name, child in probed.attachments:
                     cfmt = sniff_bytes(child, None)
@@ -617,8 +462,7 @@ def make_extract_any(cfg: PipelineConfig, allow_container: bool = True):
             out: list[dict] = []
             for r in pdf_batch.itertuples(index=False):
                 _dispatch_one(r.url, r.warc_ts, r.lang, r.fmt, r.html,
-                              r.text, out,
-                              allow_container=allow_container)
-            yield pd.DataFrame(out, columns=_BRANCH_COLS) if out else _empty()
+                              r.text, out)
+            yield pd.DataFrame(out, columns=_BRANCH_COLS)
 
     return extract_any

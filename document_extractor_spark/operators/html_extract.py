@@ -18,13 +18,14 @@ common_pdf.sh:85-156) into per-block features:
 - structural boilerplate containers (nav/footer/header/aside/script/
   style/form/...) excluded outright.
 
-Three parse modes form the cascade (SURVEY.md M3, mirroring the
-reference's TXT -> OCR-A -> OCR-B escalation, pass_pdf.py:112-255):
-
-- ``strict``  : parse + structural validation (balanced tags, a
-                doctype/<html> root). Violations reject the stage.
-- ``lenient`` : same block model, tolerant of malformed markup.
-- ``raw``     : regex tag strip of the whole payload (last resort).
+The cascade (SURVEY.md M3, mirroring the reference's TXT -> OCR-A ->
+OCR-B escalation, pass_pdf.py:112-255) needs ONE parse:
+``parse_blocks_observed`` builds the block model tolerantly and
+reports the first structural violation (unbalanced tags, no
+doctype/<html> root), or None. The strict stage accepts only when
+there is none; the lenient stage takes the same blocks regardless;
+``extract_raw`` (regex tag strip of the whole payload) is the last
+resort.
 
 Extracted text is ``"\\n".join(block texts)`` — the exact join byte
 contract of the reference's page concatenation (pass_pdf_txt.py:64).
@@ -35,7 +36,7 @@ Spans are character offsets (start, end) of each kept block in the
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from html import unescape
 from html.parser import HTMLParser
 
@@ -71,10 +72,6 @@ def norm_ws(text: str) -> str:
     return _WS_RE.sub(" ", text).strip()
 
 
-class StrictParseError(ValueError):
-    pass
-
-
 @dataclass
 class Block:
     text: str
@@ -98,10 +95,9 @@ class Block:
 
 
 class _BlockParser(HTMLParser):
-    def __init__(self, source: str, strict: bool) -> None:
+    def __init__(self, source: str) -> None:
         super().__init__(convert_charrefs=False)
         self.source = source
-        self.strict = strict
         self._line_starts: list[int] | None = None
         self.blocks: list[Block] = []
         self.pieces: list[tuple[int, int, str, bool, bool]] = []
@@ -110,7 +106,7 @@ class _BlockParser(HTMLParser):
         self.tag_stack: list[str] = []
         self.block_tag_stack: list[str] = ["html"]
         self.saw_root = False
-        self.violation: str | None = None  # observed strict violation
+        self.violation: str | None = None  # first structural violation
 
     # --- position helpers -------------------------------------------------
     @property
@@ -203,10 +199,6 @@ class _BlockParser(HTMLParser):
     def handle_endtag(self, tag: str) -> None:
         if not self.tag_stack or self.tag_stack[-1] != tag:
             self.violation = self.violation or f"mismatched </{tag}>"
-            if self.strict:
-                raise StrictParseError(
-                    f"mismatched </{tag}> at offset {self._abs()}"
-                )
         # flush while the closing tag's state is still on the stacks, so
         # the block is attributed to it (an <h1>'s text must carry tag=h1)
         if tag in _FLUSH_TAGS:
@@ -268,13 +260,9 @@ class _BlockParser(HTMLParser):
         self._flush()
         if not self.saw_root:
             self.violation = self.violation or "no doctype/<html> root"
-            if self.strict:
-                raise StrictParseError("no doctype/<html> root")
         leftover = [t for t in self.tag_stack if t not in ("html", "body")]
         if leftover:
             self.violation = self.violation or f"unclosed tags: {leftover}"
-            if self.strict:
-                raise StrictParseError(f"unclosed tags: {leftover}")
         return self.blocks
 
 
@@ -326,7 +314,7 @@ class _FastEventDriver(_BlockParser):
     (no line/col bookkeeping)."""
 
     def __init__(self, source: str) -> None:
-        _BlockParser.__init__(self, source, strict=False)
+        _BlockParser.__init__(self, source)
         self._pos = 0
 
     def _abs(self) -> int:
@@ -451,7 +439,7 @@ def parse_blocks_observed(html_str: str) -> tuple[list[Block], str | None]:
     fast = _fast_blocks(html_str)
     if fast is not None:
         return fast
-    parser = _BlockParser(html_str, strict=False)
+    parser = _BlockParser(html_str)
     try:
         parser.feed(html_str)
         parser.close()
@@ -459,24 +447,6 @@ def parse_blocks_observed(html_str: str) -> tuple[list[Block], str | None]:
         parser.violation = parser.violation or f"parser error: {exc}"
     blocks = parser.finish()
     return blocks, parser.violation
-
-
-def parse_blocks(html_str: str, strict: bool = False) -> list[Block]:
-    """Tokenize HTML into the DOM block sequence.
-
-    Raises StrictParseError in strict mode on malformed markup.
-    """
-    parser = _BlockParser(html_str, strict)
-    try:
-        parser.feed(html_str)
-        parser.close()
-    except StrictParseError:
-        raise
-    except Exception as exc:
-        if strict:
-            raise StrictParseError(str(exc)) from exc
-        # lenient mode: keep whatever blocks were built before the error
-    return parser.finish()
 
 
 # multilingual function-word set for the optional stopword gate: the
@@ -557,18 +527,20 @@ def classify_blocks(
 
 def extract_html(
     html_str: str,
-    strict: bool = False,
     min_block_chars: int = 25,
     max_link_density: float = 0.35,
     min_stopword_ratio: float = 0.0,
-) -> tuple[str, list[tuple[int, int]]]:
-    """(extracted_text, spans). Raises StrictParseError in strict mode."""
-    blocks = parse_blocks(html_str, strict=strict)
+) -> tuple[str, list[tuple[int, int]], str | None]:
+    """(extracted_text, spans, violation): the kept blocks' text and
+    source spans, from ONE parse, plus its first structural violation
+    (None = strictly valid) — everything the strict and lenient
+    cascade stages decide on."""
+    blocks, violation = parse_blocks_observed(html_str)
     kept = classify_blocks(blocks, min_block_chars, max_link_density,
                            min_stopword_ratio)
     text = "\n".join(b.text for b in kept)  # E12 join contract
     spans = [(b.start, b.end) for b in kept]
-    return text, spans
+    return text, spans, violation
 
 
 def extract_raw(html_str: str) -> str:
@@ -594,7 +566,7 @@ def dom_block_table(pages, url_col: str = "url",
     measuring boilerplate mass per site).
 
     Arrow-batched kernel over the same parser + classifier the
-    pipeline runs (parse_blocks observed mode + classify_blocks), so
+    pipeline runs (parse_blocks_observed + classify_blocks), so
     the table can never drift from extraction behavior. Zero
     shuffles; block counts per page are bounded by the DOM.
     """
@@ -612,10 +584,9 @@ def dom_block_table(pages, url_col: str = "url",
                 html = getattr(r, html_col)
                 if html is None:
                     continue
-                # observed mode — the SAME entry point the pipeline
-                # runs (fast tokenizer + HTMLParser fallback); a
-                # parse_blocks call here would take the HTMLParser-only
-                # path and could drift from actual extraction behavior
+                # the SAME entry point the pipeline runs (fast
+                # tokenizer + HTMLParser fallback), so the table
+                # cannot drift from actual extraction behavior
                 blocks, _ = parse_blocks_observed(html)
                 kept_ids = {id(k) for k in classify_blocks(
                     blocks, min_block_chars, max_link_density)}

@@ -93,40 +93,6 @@ def lsh_bucketed(emb: DataFrame, n_bits: int = 8, seed: int = 7,
     return emb.select(id_col, vec_col).mapInPandas(signer, schema=out_schema)
 
 
-def lsh_bucketed_jvm(emb: DataFrame, n_bits: int = 8, seed: int = 7,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     dim: int | None = None) -> DataFrame:
-    """Pure-JVM twin of lsh_bucketed for environments without Python
-    workers. NOT the default: Spark's higher-order functions
-    (zip_with/aggregate) evaluate interpreted, so the 8 per-row dot
-    products measured ~2x slower than the Arrow signer's per-batch
-    numpy matmul — the vectorized pandas UDF is the scale path here.
-    Bit-equal to the Arrow signer except for vectors whose projection
-    is within float summation error of 0 (pytest asserts equality).
-
-    Pass `dim` explicitly at scale: the dim=None convenience probe is
-    a DRIVER ACTION (a job per plan construction) and exists only for
-    interactive use — plan-building code must never trigger jobs
-    (r3 verdict: similarity.py #3).
-    """
-    if dim is None:
-        head = emb.select(vec_col).head()
-        if head is None:
-            return emb.select(id_col, vec_col).withColumn(
-                "bucket", F.lit(None).cast("int"))
-        dim = len(head[0])
-    planes = _planes(dim, n_bits, seed)
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    bucket = F.lit(0)
-    for b in range(n_bits):
-        plane = F.array(*[F.lit(float(v)) for v in planes[b]])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bucket = bucket + (dot > 0).cast("int") * F.lit(1 << b)
-    return emb.select(id_col, vec_col, bucket.alias("bucket"))
-
-
 @dataclass
 class LshIndex:
     """Built LSH index: the bucket-signed table (persist it — queries
@@ -171,32 +137,6 @@ def lsh_query(index: LshIndex, query_vec: list[float], k: int = 10,
     candidates = index.bucketed.filter(F.col("bucket").isin(probes))
     return brute_force_topk(candidates, query_vec, k,
                             index.id_col, index.vec_col)
-
-
-def lsh_topk(emb: DataFrame, query_vec: list[float], k: int = 10,
-             n_bits: int = 8, seed: int = 7, multiprobe: bool = True,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """One-shot convenience: build + single query. For repeated
-    lookups use lsh_build once and lsh_query per query (the one-shot
-    path signs the corpus on every call)."""
-    index = lsh_build(emb, n_bits, seed, id_col, vec_col, persist=False)
-    return lsh_query(index, query_vec, k, multiprobe)
-
-
-def _l2_normalized(vec_col):
-    """Catalyst inlines a lambda-captured expression PER ELEMENT, so
-    dividing by _norm_expr inside transform() re-evaluates the O(dim)
-    norm dim times (the repo measured this trap at 5-10x elsewhere).
-    zip_with against a same-length array of the precomputed norm keeps
-    the norm expression evaluated once per row... still inlined per
-    element by Catalyst; instead divide AFTER the transform using a
-    scalar multiply: compute inv = 1/norm once via a nested aggregate
-    is equally inlined — the only robust hoist without a join is to
-    evaluate the norm in a separate projection, which ivf_fit_assign
-    now does (see _with_unit_vec)."""
-    n = _norm_expr(vec_col)
-    return F.transform(vec_col, lambda x: x.cast("double") / n)
 
 
 def _with_unit_vec(emb: DataFrame, vec_col: str, out_col: str) -> DataFrame:

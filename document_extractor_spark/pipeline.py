@@ -6,7 +6,7 @@ process_run -> pass_* -> output_writer DAG, SURVEY.md §3):
     pages ─ sniff fmt (Column expr, codegen)
       ├─ fmt=noise        → dropped silently (process_run.py:158-164)
       ├─ fmt=unsupported  → quarantine (process_run.py:166-171)
-      ├─ fmt=pdf          → container explode → pdf text-layer branch
+      ├─ fmt=pdf          → portfolio children inline → pdf text layer
       ├─ fmt=html         → strict → lenient → raw cascade
       ├─ fmt=txt/pretext  → text branch
       └─ one BRANCH_SCHEMA stream
@@ -16,16 +16,12 @@ process_run -> pass_* -> output_writer DAG, SURVEY.md §3):
           ├─ quarantine table (ERROR rows + unsupported)
           └─ metrics per partition (north_rule counters)
 
-Two physical realizations of the same semantics:
-
-- fused (default): ONE Arrow mapInPandas stage dispatches per row on
-  the JVM-sniffed fmt and short-circuits the cascade internally.
-  One scan, one Python stage, zero duplicate work — the right shape
-  at 100 TB, where a staged cascade would re-execute upstream Python
-  stages once per consumer and re-scan the table per branch.
-- staged: the cascade and branches as separate filtered DataFrames
-  (the literal structural twin of the reference's pass scripts).
-  Kept for operator-level testing; tests assert fused == staged.
+Physical plan (branch_stream): ONE Arrow mapInPandas stage dispatches
+per row on the JVM-sniffed fmt and short-circuits the cascade
+internally; portfolio children are re-dispatched inline (depth 1).
+One scan, one Python stage, zero duplicate work — the right shape at
+100 TB, where a cascade of separate stages would re-execute upstream
+Python stages once per consumer and re-scan the table per branch.
 
 Scale notes (100 TB design):
 - Dispatch and the final doc-text join are JVM-side (whole-stage
@@ -48,30 +44,9 @@ from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .functions.sniff import (
-    FMT_DOC,
-    FMT_DOCX,
-    FMT_GZIP,
-    FMT_HTML,
-    FMT_IMG,
-    FMT_PDF,
-    FMT_PRETEXT,
-    FMT_TXT,
-    FMT_UNSUPPORTED,
-    sniff_format,
-)
-from .operators.container import explode_containers
+    FMT_PRETEXT, FMT_TXT, FMT_UNSUPPORTED, sniff_format)
 from .schemas import PAGES_COLS as _PAGES_COLS
-from .operators.extract_branches import (
-    BRANCH_SCHEMA,
-    CASCADE_SCHEMA,
-    make_doc_branch,
-    make_docx_branch,
-    make_extract_any,
-    make_html_stage,
-    make_pdf_branch,
-    make_txt_branch,
-)
-
+from .operators.extract_branches import BRANCH_SCHEMA, make_extract_any
 
 
 @dataclass
@@ -122,102 +97,14 @@ def bucket_by_url_hash(df: DataFrame, buckets: int) -> DataFrame:
     return df.repartition(buckets, F.pmod(F.xxhash64("url"), F.lit(buckets)))
 
 
-def _staged_branches(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Structural cascade: separate mapInPandas per branch/stage.
-
-    Each stage runs only on the previous remainder (payload carried
-    through, nulled on accept) — the literal dataflow twin of
-    pass_pdf.py:112-255. Used by tests; run_extraction defaults to
-    the fused dispatcher.
-    """
+def branch_stream(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The extraction plan: JVM sniff, then ONE Arrow mapInPandas stage
+    that dispatches per row on fmt. Shared by the batch pipeline and
+    the streaming plan (extracted_stream), so both run the same
+    branch stream."""
     sniffed = pages.withColumn(
         "fmt", sniff_format(F.col("html"), F.col("text")))
-
-    pdf_stream = (
-        sniffed.filter(F.col("fmt") == FMT_PDF)
-        .drop("fmt")
-        .mapInPandas(explode_containers, schema=pages.schema)
-        .withColumn("fmt", sniff_format(F.col("html"), F.col("text")))
-    )
-    dispatched = sniffed.filter(
-        F.col("fmt") != FMT_PDF).unionByName(pdf_stream)
-    # gzip rows: decompress + inner dispatch is inherently per-row
-    # recursive, so the staged path delegates that slice to the fused
-    # kernel (identical semantics by construction). Container-child
-    # gzip rows (they appear only after the explode re-sniff) carry
-    # allow_container=False exactly like the fused dispatcher — a
-    # gzip-wrapped portfolio INSIDE a portfolio must not explode a
-    # second level (depth-1 contract).
-    gzip_out = (
-        sniffed.filter(F.col("fmt") == FMT_GZIP)
-        .mapInPandas(make_extract_any(cfg), schema=BRANCH_SCHEMA)
-        .unionByName(
-            pdf_stream.filter(F.col("fmt") == FMT_GZIP)
-            .mapInPandas(make_extract_any(cfg, allow_container=False),
-                         schema=BRANCH_SCHEMA))
-    )
-
-    # image rows (top-level or container children): per-row OCR is
-    # self-contained, so the staged path reuses the fused kernel on
-    # the img slice (identical semantics by construction, like gzip)
-    img_out = (
-        dispatched.filter(F.col("fmt") == FMT_IMG)
-        .mapInPandas(make_extract_any(cfg), schema=BRANCH_SCHEMA)
-    )
-
-    txt_rows = dispatched.filter(F.col("fmt").isin(FMT_TXT, FMT_PRETEXT))
-    docx_rows = dispatched.filter(F.col("fmt") == FMT_DOCX)
-    doc_rows = dispatched.filter(F.col("fmt") == FMT_DOC)
-    pdf_rows = dispatched.filter(F.col("fmt") == FMT_PDF)
-    html_rows = dispatched.filter(F.col("fmt") == FMT_HTML)
-    unsupported = dispatched.filter(F.col("fmt") == FMT_UNSUPPORTED)
-
-    txt_out = txt_rows.mapInPandas(make_txt_branch(cfg), schema=BRANCH_SCHEMA)
-    docx_out = docx_rows.mapInPandas(
-        make_docx_branch(cfg), schema=BRANCH_SCHEMA)
-    doc_out = doc_rows.mapInPandas(
-        make_doc_branch(cfg), schema=BRANCH_SCHEMA)
-    pdf_out = pdf_rows.mapInPandas(make_pdf_branch(cfg), schema=BRANCH_SCHEMA)
-
-    s1 = html_rows.mapInPandas(
-        make_html_stage(cfg, "strict"), schema=CASCADE_SCHEMA)
-    rest1 = s1.filter(~F.col("accepted")).select(
-        "url", "warc_ts", "html",
-        F.lit(None).cast("string").alias("text"), "lang")
-    s2 = rest1.mapInPandas(
-        make_html_stage(cfg, "lenient"), schema=CASCADE_SCHEMA)
-    rest2 = s2.filter(~F.col("accepted")).select(
-        "url", "warc_ts", "html",
-        F.lit(None).cast("string").alias("text"), "lang")
-    s3 = rest2.mapInPandas(
-        make_html_stage(cfg, "raw", final=True), schema=CASCADE_SCHEMA)
-    html_out = (
-        s1.filter(F.col("accepted"))
-        .unionByName(s2.filter(F.col("accepted")))
-        .unionByName(s3)
-        .drop("html", "accepted")
-    )
-
-    unsupported_out = unsupported.select(
-        "url", "warc_ts", "lang",
-        F.lit(FMT_UNSUPPORTED).alias("fmt"),
-        F.lit("none").alias("method"),
-        F.lit("ERROR").alias("status"),
-        F.lit(False).alias("used_fallback"),
-        F.lit(False).alias("per_page"),
-        F.lit(0).alias("n_pages"),
-        F.lit(None).cast(
-            "array<struct<page:int,text:string,reliability:double>>"
-        ).alias("pages"),
-        F.lit(None).cast(
-            "array<struct<start:bigint,end:bigint>>").alias("spans"),
-        F.lit(0.0).alias("reliability"),
-        F.lit("unsupported").alias("error"),
-    )
-    return (txt_out.unionByName(docx_out).unionByName(doc_out)
-            .unionByName(pdf_out)
-            .unionByName(html_out).unionByName(unsupported_out)
-            .unionByName(gzip_out).unionByName(img_out))
+    return sniffed.mapInPandas(make_extract_any(cfg), schema=BRANCH_SCHEMA)
 
 
 def pages_repr() -> Column:
@@ -273,21 +160,13 @@ def run_extraction(
     spark: SparkSession,
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
-    mode: str = "fused",
     persist: bool = True,
 ) -> ExtractionResult:
     cfg = cfg or PipelineConfig()
 
     pages = pages.select(*_PAGES_COLS)
     pages = bucket_by_url_hash(pages, cfg.url_hash_buckets)
-
-    if mode == "fused":
-        sniffed = pages.withColumn(
-            "fmt", sniff_format(F.col("html"), F.col("text")))
-        branches = sniffed.mapInPandas(
-            make_extract_any(cfg), schema=BRANCH_SCHEMA)
-    else:
-        branches = _staged_branches(pages, cfg)
+    branches = branch_stream(pages, cfg)
 
     if persist:
         branches = branches.persist(StorageLevel.MEMORY_AND_DISK)

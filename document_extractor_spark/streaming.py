@@ -22,8 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .config import PipelineConfig
-from .functions.sniff import FMT_UNSUPPORTED, sniff_format
-from .operators.extract_branches import BRANCH_SCHEMA, make_extract_any
 from .schemas import PAGES_SCHEMA
 
 
@@ -39,19 +37,15 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
 
 def extracted_stream(pages_stream: DataFrame,
                      cfg: PipelineConfig | None = None) -> DataFrame:
-    """The fused extraction plan applied to a streaming DataFrame.
-
-    Identical logical plan to pipeline.run_extraction's fused mode,
-    minus the batch-only repartition/persist (a streaming micro-batch
-    is already split by its source files).
+    """The extraction plan applied to a streaming DataFrame: the same
+    pipeline.branch_stream and granularity_project calls as
+    run_extraction, minus the batch-only repartition/persist (a
+    streaming micro-batch is already split by its source files).
     """
     cfg = cfg or PipelineConfig()
-    from .pipeline import granularity_project
+    from .pipeline import branch_stream, granularity_project
 
-    sniffed = pages_stream.withColumn(
-        "fmt", sniff_format(F.col("html"), F.col("text")))
-    branches = sniffed.mapInPandas(make_extract_any(cfg), schema=BRANCH_SCHEMA)
-    return granularity_project(branches, cfg.run_id)
+    return granularity_project(branch_stream(pages_stream, cfg), cfg.run_id)
 
 
 def _make_batch_writer(output_dir: str, cfg: PipelineConfig):

@@ -1,15 +1,12 @@
 """HTML block extractor unit tests (north_star block model)."""
 from html import unescape
 
-import pytest
-
 from document_extractor_spark.operators.html_extract import (
-    StrictParseError,
     classify_blocks,
     extract_html,
     extract_raw,
     norm_ws,
-    parse_blocks,
+    parse_blocks_observed,
 )
 
 CLEAN = """<!DOCTYPE html>
@@ -34,14 +31,17 @@ EXPECTED = (
 
 
 def test_clean_extraction_strict():
-    text, spans = extract_html(CLEAN, strict=True)
+    """A well-formed page has no structural violation, so the cascade's
+    strict stage may accept it."""
+    text, spans, violation = extract_html(CLEAN)
+    assert violation is None
     assert text == EXPECTED
     assert len(spans) == 3
 
 
 def test_span_invariant():
     """norm_ws(unescape(source[start:end])) == block text."""
-    text, spans = extract_html(CLEAN, strict=True)
+    text, spans, _ = extract_html(CLEAN)
     blocks = text.split("\n")
     for (s, e), block_text in zip(spans, blocks):
         assert norm_ws(unescape(CLEAN[s:e])) == block_text
@@ -49,12 +49,12 @@ def test_span_invariant():
 
 def test_entities_no_spurious_spaces():
     html = "<html><body><p>AT&amp;T announced twenty new regional plans.</p></body></html>"
-    text, _ = extract_html(html)
+    text, _, _ = extract_html(html)
     assert text == "AT&T announced twenty new regional plans."
 
 
 def test_boilerplate_dropped():
-    blocks = parse_blocks(CLEAN)
+    blocks, _ = parse_blocks_observed(CLEAN)
     kept = classify_blocks(blocks)
     texts = [b.text for b in kept]
     assert not any("Home" in t for t in texts)  # nav
@@ -67,27 +67,52 @@ def test_boilerplate_dropped():
 
 def test_strict_rejects_malformed():
     bad = CLEAN.replace("</article></main>", "</main>")
-    with pytest.raises(StrictParseError):
-        extract_html(bad, strict=True)
+    text, _, violation = extract_html(bad)
+    assert violation == "mismatched </main>"
     # lenient recovers the same content
-    text, _ = extract_html(bad, strict=False)
     assert text == EXPECTED
 
 
 def test_strict_requires_root():
-    with pytest.raises(StrictParseError):
-        extract_html("<p>Just a fragment of text that is long enough here.</p>",
-                      strict=True)
+    _, _, violation = extract_html(
+        "<p>Just a fragment of text that is long enough here.</p>")
+    assert violation == "no doctype/<html> root"
 
 
 def test_raw_strip():
     assert extract_raw("<div>Hello <b>world</b> &amp; you</div>") == "Hello world & you"
 
 
+def test_html_core_raw_acceptance():
+    """The cascade's last stage: kept blocks score below the lenient
+    cutoff, the raw tag strip clears html_raw_cutoff, so the page is
+    accepted as html_raw (a fallback, with no block spans)."""
+    from document_extractor_spark.config import PipelineConfig
+    from document_extractor_spark.functions.scoring import score_reliability
+    from document_extractor_spark.operators.extract_branches import (
+        _html_core)
+
+    noisy = "<p>" + "== -- ## " * 4 + "Report</p>"  # the one kept block
+    short = "".join(f"<div>Alpha beta gamma {i}</div>" for i in range(6))
+    html = f"<!DOCTYPE html><html><body>{noisy}{short}</body></html>"
+    cfg = PipelineConfig()
+    kept, _, _ = extract_html(html)
+    assert kept and score_reliability(kept) < cfg.html_lenient_cutoff
+    raw = extract_raw(html)
+    assert score_reliability(raw) >= cfg.html_raw_cutoff
+
+    row = _html_core("u://raw", None, "en", html.encode(), cfg)
+    assert row["method"] == "html_raw"
+    assert row["status"] == "OK"
+    assert row["used_fallback"] is True
+    assert row["spans"] == []
+    assert row["pages"] == [(1, raw, score_reliability(raw))]
+
+
 def test_heading_kept_regardless_of_length():
     html = "<html><body><main><h1>Tiny</h1><p>%s</p></main></body></html>" % (
         "Real content sentence that is long enough to keep easily.")
-    text, _ = extract_html(html)
+    text, _, _ = extract_html(html)
     assert text.startswith("Tiny\n")
 
 
@@ -96,10 +121,7 @@ def test_stopword_gate_drops_keyword_stuffing():
     density): enabled, it drops long link-light keyword-stuff blocks
     while keeping real content in en/de/fr (multilingual union set)."""
     from document_extractor_spark.operators.html_extract import (
-        classify_blocks,
-        parse_blocks,
-        stopword_ratio,
-    )
+        stopword_ratio)
 
     spam = ("cheap widgets best widgets buy widgets discount widgets "
             "premium widgets widgets sale widgets deal widgets shop")
@@ -113,7 +135,7 @@ def test_stopword_gate_drops_keyword_stuffing():
             f"<p>{content_en}</p><p>{spam}</p>"
             f"<p>{content_de}</p><p>{content_fr}</p>"
             "</body></html>")
-    blocks = parse_blocks(html)
+    blocks, _ = parse_blocks_observed(html)
 
     default = classify_blocks(blocks)
     gated = classify_blocks(blocks, min_stopword_ratio=0.08)
@@ -189,7 +211,7 @@ def test_dom_block_table_features_and_verdicts(spark):
     # the table's verdicts must equal the pipeline's extraction
     from document_extractor_spark.operators.html_extract import (
         extract_html)
-    text, _ = extract_html(html)
+    text, _, _ = extract_html(html)
     kept_hashes = {r.text_md5 for r in rows if r.kept}
     import hashlib
     for part in text.split("\n"):
@@ -199,7 +221,7 @@ def test_dom_block_table_features_and_verdicts(spark):
 def _legacy_observed(s):
     import document_extractor_spark.operators.html_extract as hx
 
-    p = hx._BlockParser(s, strict=False)
+    p = hx._BlockParser(s)
     try:
         p.feed(s)
         p.close()

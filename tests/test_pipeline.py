@@ -258,25 +258,6 @@ def test_reliability_bounds(extraction, status):
     assert ((sub.reliability >= 0) & (sub.reliability <= 1)).all()
 
 
-def test_fused_equals_staged(spark, pages_df, cfg):
-    """The fused single-pass dispatcher must be row-for-row identical
-    to the structural staged cascade (same semantics, one Arrow pass)."""
-    from document_extractor_spark.pipeline import run_extraction
-
-    sub = pages_df.limit(120)
-    fused = run_extraction(spark, sub, cfg, mode="fused", persist=False)
-    staged = run_extraction(spark, sub, cfg, mode="staged", persist=False)
-    cols = ["url", "page", "fmt", "method", "status", "used_fallback",
-            "pages", "text", "reliability"]
-    f = fused.extracted.select(cols).toPandas().sort_values(
-        ["url", "page"]).reset_index(drop=True)
-    s = staged.extracted.select(cols).toPandas().sort_values(
-        ["url", "page"]).reset_index(drop=True)
-    assert len(f) == len(s)
-    for c in cols:
-        assert (f[c].fillna("~") == s[c].fillna("~")).all(), c
-
-
 def test_extract_one_debug_path(spark, pages_df, corpus, cfg):
     """§3.2 ad-hoc single-doc entry, incl. stage forcing via cutoffs
     (the analog of PASS_TXT_CUTOFF=2 probe wrappers)."""
