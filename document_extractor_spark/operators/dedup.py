@@ -4,11 +4,13 @@ The reference only *plans* dedup ("Checksum cache to skip reprocessing
 duplicates", TODO.md:20). Here it is first-class, at five levels:
 
 - exact: content-hash groupBy (md5) — one shuffle, scales linearly.
-- n-gram Jaccard: word-shingle set overlap via df-capped posting
-  lists (explode -> groupBy(shingle) -> in-row pair expansion), two
-  shuffles total. Shingles (not unigrams) keep candidates selective:
-  only docs sharing a full n-gram pair up, so the pair set stays
-  near-linear for natural text instead of O(n^2).
+- n-gram Jaccard: word-shingle set overlap with df-capped shingles.
+  The JVM hashes each doc's shingle set; one exchange carries the
+  per-doc arrays into a numpy kernel that counts shared shingles per
+  pair where the pairs are produced and emits only pairs that can
+  reach the threshold. Shingles (not unigrams) keep candidates
+  selective: only docs sharing a full n-gram pair up, so the pair set
+  stays near-linear for natural text instead of O(n^2).
 - MinHash: k deterministic md5-derived hash functions, signature =
   per-doc min per seed — one explode + one groupBy with k min() aggs.
 - MinHash-LSH banding: signatures split into b bands; docs sharing a
@@ -78,6 +80,11 @@ def seed_hash(col, seed: int):
     ).cast("long")
 
 
+def md5_60(col):
+    """Unseeded 60-bit md5 hash of a string column (see module doc)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def tokhash_set_col(text_col: str = "text"):
     """Distinct token set as 60-bit md5 hashes (`array<long>`).
 
@@ -88,10 +95,7 @@ def tokhash_set_col(text_col: str = "text"):
     hashes. An 8-byte element vs a string shrinks the verify join's
     shuffle and makes the per-pair intersect a primitive-long set
     probe instead of a string one."""
-    return F.array_distinct(F.transform(
-        tokens_col(text_col),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
-        .cast("long")))
+    return F.array_distinct(F.transform(tokens_col(text_col), md5_60))
 
 
 def widen_narrow_input(df: DataFrame) -> DataFrame:
@@ -135,65 +139,61 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         max_shingle_df: int | None = 1000) -> DataFrame:
     """Pairs (a < b) with shingle-set Jaccard >= threshold.
 
-    TWO shuffles total: explode -> groupBy(shingle) collects each
-    shingle's (distinct, sorted) doc-id posting list, JVM array math
-    expands it to ordered pairs, groupBy(id_a, id_b) counts the
-    intersection. Per-doc set sizes are computed from the pre-explode
-    array (narrow) and carried through the posting list, so the pair
-    stream needs no size lookup at all.
+    The JVM tokenizes, shingles and md5-60-hashes each doc into its
+    distinct shingle-hash array (SQL-reproducible, see module doc;
+    collisions at 2^60 are negligible for intersection counting). ONE
+    exchange carries those arrays, one row per doc and shingle range,
+    into `_pair_counts`, a numpy kernel that takes exact shingle df,
+    applies the cap, counts each pair's shared shingles where the
+    pairs are produced, and emits only pairs that can still reach
+    `threshold`. A JVM sum by pair merges the ranges' partial counts
+    (with one range its input is one partition, so it adds no
+    exchange); the Jaccard round and threshold stay JVM expressions.
+
+    Shingle ranges: each array splits by `pmod(hash, B)` and the
+    exchange keys on the range, so every occurrence of a shingle lands
+    in one task and its df is exact there. B comes from the plan's
+    size estimate (`_shingle_ranges`); it is 1 for every parquet input
+    in this repo, so the kernel sees the whole corpus and prunes
+    exactly.
 
     `max_shingle_df` caps shingle document frequency: a corpus-hot
     shingle (boilerplate phrase) otherwise contributes O(df^2) pairs —
-    at 10^12 docs that posting list is a straggler that never
-    finishes, and it also bounds the collected list's memory (<= cap
-    ids per group). Set sizes stay over the FULL shingle universe
-    while intersections count only capped shingles, so a
-    boilerplate-only pair's Jaccard can only shrink; true near-dup
-    pairs share mostly *rare* shingles and keep their score (pytest
-    proves recall unchanged on the synthetic corpus). Pass None to
-    disable (exact baseline, unbounded lists — test scale only).
+    at 10^12 docs that is a straggler that never finishes. Set sizes
+    stay over the FULL shingle universe while intersections count only
+    capped shingles, so a boilerplate-only pair's Jaccard can only
+    shrink; true near-dup pairs share mostly *rare* shingles and keep
+    their score (pytest proves recall unchanged on the synthetic
+    corpus). Pass None to disable (exact baseline, test scale only).
     """
-    arrs = widen_narrow_input(docs).select(
-        F.col(id_col),
-        F.array_distinct(shingles_col(tokens_col(text_col), n)).alias("sh"))
-    # n_sh rides WITH the id through the posting list, so the pair
-    # stream needs no size join at all (a broadcast-join formulation
-    # re-executed the tokenization subplan once per broadcast build).
-    # Shingles shuffle as 60-bit md5-derived hashes, not strings: an
-    # 8-byte key vs a ~25-byte n-gram shrinks the exchange and speeds
-    # the group compare (SQL-reproducible, see module doc; collisions
-    # at 2^60 are negligible for intersection counting).
-    exploded = arrs.select(
-        F.col(id_col).alias("id"), F.size("sh").alias("n_sh"),
-        F.explode(F.transform(
-            "sh",
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-            .cast("long"))).alias("shingle"))
-    posting = (
-        exploded.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "n_sh")))
-             .alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    if max_shingle_df is not None:
-        posting = posting.filter(F.size("ids") <= max_shingle_df)
-    # ordered pairs from the id-sorted posting list via TWO chained
-    # posexplodes (Generate is whole-stage-codegen'd; the previous
-    # nested transform/flatten built every pair struct in the
-    # interpreter — measured 1.3x slower — and buffered a posting's
-    # whole pair expansion in one row, while Generate streams).
-    # Positions order == id order (the list is array_sort'd), so
-    # py > px reproduces exactly the id_a < id_b pair set.
-    e1 = posting.select("ids", F.posexplode("ids").alias("px", "x"))
-    e2 = (e1.select("px", "x", F.posexplode("ids").alias("py", "y"))
-          .filter(F.col("py") > F.col("px")))
-    inter = (
-        e2.groupBy(F.col("x.id").alias("id_a"),
-                   F.col("y.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"),
-             F.first("x.n_sh").alias("sh_a"),
-             F.first("y.n_sh").alias("sh_b"))
-    )
+    sh = F.array_distinct(F.transform(
+        shingles_col(tokens_col(text_col), n), md5_60))
+    # no filter on the array: the optimizer pushes one below the
+    # caller's widen exchange and hashes every doc twice there; the
+    # kernel passes over docs with no shingles instead
+    arrs = (docs.filter(F.col(id_col).isNotNull())
+            .select(F.col(id_col).alias("id"), sh.alias("sh"))
+            .select("id", F.size("sh").alias("n_sh"), "sh"))
+    ranges = _shingle_ranges(docs)
+    if ranges > 1:  # one row per (doc, range it has shingles in)
+        arrs = (arrs.select(
+            "id", "n_sh", "sh", F.explode(F.array_distinct(F.transform(
+                "sh", lambda h: F.pmod(h, ranges)))).alias("p"))
+            .select("id", "n_sh", F.filter(
+                "sh", lambda h: F.pmod(h, ranges) == F.col("p")).alias("sh"),
+                "p")
+            .repartition(ranges, "p").select("id", "n_sh", "sh"))
+    else:
+        arrs = arrs.repartition(1)
+    id_type = docs.schema[id_col].dataType.simpleString()
+    # read here, not in the worker: the pickled closure carries them
+    cap, budget = max_shingle_df, PAIR_BUDGET
+    counted = arrs.mapInArrow(
+        lambda it: _pair_counts(it, threshold, cap, budget),
+        schema=f"id_a {id_type}, id_b {id_type}, inter long, "
+               "sh_a int, sh_b int")
+    inter = (counted.groupBy("id_a", "id_b", "sh_a", "sh_b")
+             .agg(F.sum("inter").alias("inter")))
     return (
         inter
         .withColumn("jaccard", F.round(
@@ -202,6 +202,161 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+# Estimated input bytes (optimized-plan `sizeInBytes`, i.e. parquet
+# bytes for a scan) per shingle range of `ngram_jaccard_pairs`. The
+# benchmark's 5,000-doc table estimates 599,730 B and yields 259k
+# (doc, shingle) occurrences, ~0.43 per byte, so one range holds
+# <= ~1.8M occurrences. `_pair_counts` peaks at ~32 B of worker RSS
+# per occurrence (measured there: +8 MB for 259k), so ~60 MB per task
+# at the bound. B = 1 for every parquet input in this repo.
+RANGE_BYTES = 4 << 20
+# Pairs expanded per `_pair_counts` chunk (a doc whose own pairs
+# exceed it is one chunk); ~50 B per pair, ~1 MB, live while counted.
+PAIR_BUDGET = 20_000
+
+
+def _shingle_ranges(docs: DataFrame) -> int:
+    """B = ceil(size estimate / RANGE_BYTES), within
+    [1, spark.sql.shuffle.partitions]. The estimate is read from the
+    optimized plan's statistics: no job runs. A plan without size
+    statistics (an RDD or a local collection) estimates Long.MaxValue,
+    hence the upper clamp; a session without a JVM plan handle
+    (Connect) gets one range."""
+    try:
+        plan = docs._jdf.queryExecution().optimizedPlan()
+    except AttributeError:  # Connect: no JVM plan handle
+        return 1
+    est = int(str(plan.stats().sizeInBytes()))
+    most = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(most, -(-est // RANGE_BYTES)))
+
+
+def _pair_counts(batches, threshold: float, cap: int | None,
+                 budget: int):
+    """mapInArrow kernel of `ngram_jaccard_pairs`: rows (id, n_sh, sh)
+    -> (id_a, id_b, inter, sh_a, sh_b) with id_a < id_b.
+
+    A doc may arrive as several rows (one per shingle range that hash
+    partitioning put in this task); `sh` holds the doc's hashes in that
+    range and `n_sh` its full distinct count. Ids are ranked densely
+    and live shingles (2 <= df <= cap) numbered densely, so an
+    occurrence packs into one int64 (shingle << 32 | rank) and a pair
+    into one int64 (rank_a << 32 | rank_b) for any id type. Sorting the
+    occurrence keys lays out each shingle's postings in ascending rank;
+    each occurrence pairs with the rest of its run. The expansion runs
+    in chunks of source ranks under `budget` pairs and is counted by
+    `np.unique`, so all of a source's pairs are counted in one chunk.
+
+    A pair leaves only if it can reach `threshold`: its count here
+    plus min(rest_a, rest_b), each doc's shingles outside this task,
+    bounds its full intersection. With one range rest is 0 and the
+    prune is exact; 1e-6 of slack leaves the decision to the JVM
+    round. A pair that survives here survives in every task sharing
+    its shingles, so the summed count is exact.
+
+    Memory: one n-long int64 buffer is sorted three times over (raw
+    hashes, occurrence keys, source keys) instead of allocating each;
+    with the Arrow input and two int32 arrays that is the peak."""
+    import pyarrow as pa
+
+    ids, nsh, lens, hs = [], [], [], []
+    for b in batches:
+        sh = b.column(2)
+        ids.append(b.column(0).to_numpy(zero_copy_only=False))
+        nsh.append(b.column(1).to_numpy(zero_copy_only=False))
+        lens.append(sh.value_lengths().to_numpy(zero_copy_only=False))
+        hs.append(sh.flatten().to_numpy(zero_copy_only=False))
+    if not sum(map(len, hs)):
+        return
+    uid, row_rank = np.unique(np.concatenate(ids), return_inverse=True)
+    row_rank = row_rank.astype(np.int32)
+    n_doc = np.zeros(len(uid), dtype=np.int32)
+    n_doc[row_rank] = np.concatenate(nsh)
+    rest = n_doc - np.bincount(row_rank, weights=np.concatenate(lens),
+                               minlength=len(uid)).astype(np.int32)
+    del ids, nsh
+    # exact df of every shingle: sort a copy of all hashes
+    buf = np.concatenate(hs)
+    buf.sort()
+    new = np.empty(len(buf), dtype=bool)
+    new[0] = True
+    np.not_equal(buf[1:], buf[:-1], out=new[1:])
+    starts = np.flatnonzero(new)
+    del new
+    df = np.diff(starts, append=len(buf))
+    live = df >= 2
+    if cap is not None:
+        live &= df <= cap
+    u, df = buf[starts[live]], df[live].astype(np.int32)
+    del starts, live
+    if not len(u):
+        return
+    # live occurrences as (shingle id, rank), reusing the sort buffer
+    key = buf[:int(df.sum())]
+    kv = key.view(np.int32).reshape(-1, 2)  # little-endian: [:, 1] high
+    at, row = 0, 0
+    for i, (x, ln) in enumerate(zip(hs, lens)):
+        j = np.minimum(np.searchsorted(u, x), len(u) - 1)
+        hit = u[j] == x
+        k = int(np.count_nonzero(hit))
+        kv[at:at + k, 1] = j[hit]
+        kv[at:at + k, 0] = np.repeat(row_rank[row:row + len(ln)], ln)[hit]
+        at, row = at + k, row + len(ln)
+        hs[i] = None  # release the Arrow batch
+    del hs, lens, u, j, hit
+    key.sort()
+    r = kv[:, 0].copy()
+    m = len(r)
+    # partners after each occurrence: the rest of its run
+    part = np.repeat(np.cumsum(df, dtype=np.int32), df)
+    part -= np.arange(1, m + 1, dtype=np.int32)
+    del df
+    # sources (occurrences with partners) as (rank, position), sorted
+    # so a rank range is one slice; the buffer is free again
+    is_src = part > 0
+    src = buf[:int(np.count_nonzero(is_src))]
+    sv = src.view(np.int32).reshape(-1, 2)
+    sv[:, 1] = r[is_src]
+    sv[:, 0] = np.arange(m, dtype=np.int32)[is_src]
+    del is_src, key, kv
+    src.sort()
+    bnd = np.searchsorted(src, np.arange(len(uid) + 1, dtype=np.int64) << 32)
+    load = np.zeros(len(uid))
+    for i in range(0, len(src), 1 << 16):
+        blk = sv[i:i + (1 << 16)]
+        load += np.bincount(blk[:, 1], weights=part[blk[:, 0]],
+                            minlength=len(uid))
+    load = np.cumsum(load)
+    lo, done = 0, 0.0
+    slack = threshold - 1e-6
+    while lo < len(uid):
+        hi = max(lo + 1, int(np.searchsorted(load, done + budget, "right")))
+        s = sv[bnd[lo]:bnd[hi], 0]
+        lo, done = hi, load[hi - 1]
+        if not len(s):
+            continue
+        c = part[s]
+        partner = np.repeat(s + 1 - (np.cumsum(c, dtype=np.int64) - c), c)
+        partner += np.arange(len(partner))
+        pair = np.empty(len(partner), dtype=np.int64)
+        pv = pair.view(np.int32).reshape(-1, 2)
+        pv[:, 1] = np.repeat(r[s], c)
+        pv[:, 0] = r[partner]
+        del partner
+        pair, inter = np.unique(pair, return_counts=True)
+        pv = pair.view(np.int32).reshape(-1, 2)
+        a, b = pv[:, 1], pv[:, 0]
+        sa, sb = n_doc[a], n_doc[b]
+        bound = inter + np.minimum(rest[a], rest[b])
+        ok = bound >= slack * (sa.astype(np.int64) + sb - bound)
+        if ok.any():
+            a, b = a[ok], b[ok]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(uid[a]), pa.array(uid[b]), pa.array(inter[ok]),
+                 pa.array(sa[ok]), pa.array(sb[ok])],
+                ["id_a", "id_b", "inter", "sh_a", "sh_b"])
 
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
@@ -256,7 +411,7 @@ def minhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     the pair stream a verifier can consume.
 
     `max_bucket_df` caps bucket membership exactly like
-    `ngram_jaccard_pairs.max_shingle_df` caps posting lists: a
+    `ngram_jaccard_pairs.max_shingle_df` caps shingle df: a
     corpus-hot bucket (mass-produced boilerplate all sharing one band
     signature) otherwise emits O(df^2) pairs — the straggler that
     never finishes at 10^12 docs.  Over-cap buckets are DROPPED, not
@@ -266,13 +421,12 @@ def minhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     Memory coupling: each surviving bucket is materialized as ONE row
     (collect_list of ids, <=1000 ids at the default cap); its pairs
-    then STREAM out of two chained posexplode Generates (r6 — the
-    in-row pair buffer is gone), so the cap bounds the collected list
-    itself and the per-bucket quadratic work, not a per-row pair
-    buffer. Raising `max_bucket_df` past ~10^4 still buys quadratic
-    work per hot bucket; above that, expand pairs via a band-keyed
-    self-join on the stacked band table instead (the shape
-    `minhash_incremental_decision` uses).
+    then STREAM out of two chained posexplode Generates, so the cap
+    bounds the collected list itself and the per-bucket quadratic
+    work, not a per-row pair buffer. Raising `max_bucket_df` past
+    ~10^4 still buys quadratic work per hot bucket; above that,
+    expand pairs via a band-keyed self-join on the stacked band table
+    instead (the shape `minhash_incremental_decision` uses).
     """
     sigs = minhash_signatures(docs, id_col, text_col, k)
     stacked = sigs.select(
@@ -285,8 +439,11 @@ def minhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
     if max_bucket_df is not None:
         posting = posting.filter(F.size("ids") <= max_bucket_df)
-    # chained posexplodes: codegen'd Generate streaming instead of an
-    # interpreted in-row pair buffer (see ngram_jaccard_pairs)
+    # ordered pairs from the id-sorted list via TWO chained posexplodes:
+    # Generate is whole-stage-codegen'd and streams, while a nested
+    # transform/flatten builds every pair in the interpreter and
+    # buffers a bucket's whole expansion in one row. Position order is
+    # id order (array_sort), so py > px gives exactly id_a < id_b.
     e1 = posting.select("ids", F.posexplode("ids").alias("px", "id_a"))
     return (
         e1.select("id_a", "px", F.posexplode("ids").alias("py", "id_b"))

@@ -352,6 +352,135 @@ def test_ngram_jaccard_cap_noop_on_corpus(spark):
             == set(map(tuple, capped[key].values.tolist())))
 
 
+# ids past 32 bits and below zero, so the dense ranking (not the raw
+# id) is what packs a pair into one int64 key
+_NGRAM_IDS = [2 ** 40 + 7, -3, 2 ** 33, -(2 ** 35), 0, 1, 2 ** 62, 17]
+_NGRAM_CAP = 4
+
+
+def _ngram_corpus():
+    """(rows, hot_kept, hot_dropped): near-dup families over a small
+    vocabulary, docs under 3 tokens, and two one-phrase groups whose
+    shared shingle has df == cap (kept) and df == cap + 1 (dropped).
+    Rows come in shuffled id order."""
+    import random
+
+    rnd = random.Random(11)
+    vocab = [f"w{i}" for i in range(30)]
+    texts = []
+    for fam in range(6):
+        base = [rnd.choice(vocab) for _ in range(rnd.randint(8, 30))]
+        for _ in range(rnd.randint(2, 6)):
+            t = list(base)
+            for _ in range(rnd.randint(0, 4)):
+                t[rnd.randrange(len(t))] = rnd.choice(vocab)
+            texts.append(" ".join(t) if fam % 2 else "\t".join(t).upper())
+    texts += ["", "   ", "one", "two words", "w1  w2\n", None]
+    n = len(texts)
+    hot_kept = [f"hot alpha beta k{i}" for i in range(_NGRAM_CAP)]
+    hot_dropped = [f"hot gamma delta d{i}" for i in range(_NGRAM_CAP + 1)]
+    texts += hot_kept + hot_dropped
+    ids = _NGRAM_IDS + [1000 + i for i in range(len(texts))]
+    rows = list(zip(ids, texts))
+    rnd.shuffle(rows)
+    kept = set(ids[n:n + _NGRAM_CAP])
+    dropped = set(ids[n + _NGRAM_CAP:len(texts)])
+    return rows, kept, dropped
+
+
+def _ngram_reference(rows, threshold, cap, n=3):
+    """Brute-force {(id_a, id_b): jaccard} over md5-60 shingle sets."""
+    import hashlib
+    from collections import Counter
+    from itertools import combinations
+
+    from document_extractor_spark.operators.dedup import _WS_SPLIT_RE
+
+    sets = {}
+    for i, t in rows:
+        toks = [x for x in _WS_SPLIT_RE.split((t or "").lower()) if x]
+        sets[i] = {int(hashlib.md5(" ".join(toks[k:k + n]).encode())
+                       .hexdigest()[:15], 16)
+                   for k in range(len(toks) - n + 1)}
+    df = Counter(h for s in sets.values() for h in s)
+    out = {}
+    for a, b in combinations(sorted(sets), 2):
+        inter = sum(1 for h in sets[a] & sets[b]
+                    if cap is None or df[h] <= cap)
+        if inter:
+            j = inter / (len(sets[a]) + len(sets[b]) - inter)
+            assert abs(j - threshold) > 1e-6, "corpus sits on threshold"
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+@pytest.mark.parametrize("case", ["one_range", "cap_none", "ranges",
+                                  "tiny_budget"])
+def test_ngram_jaccard_matches_bruteforce(spark, tmp_path, monkeypatch,
+                                          case):
+    """The Arrow pair kernel equals a brute-force reference: same pair
+    set, jaccard within 1e-6, at one shingle range and at several
+    (hash partitioning then sends several of a doc's ranges to one
+    task), and with a pair budget small enough to cut the expansion
+    into chunks mid-corpus."""
+    from document_extractor_spark.operators import dedup as D
+
+    rows, hot_kept, hot_dropped = _ngram_corpus()
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(path)
+    docs = spark.read.parquet(path)
+    cap = None if case == "cap_none" else _NGRAM_CAP
+    if case == "ranges":
+        monkeypatch.setattr(D, "RANGE_BYTES", 1)
+        b = D._shingle_ranges(docs)
+        tasks = (spark.range(b).repartition(b, "id")
+                 .select(F.spark_partition_id()).distinct().count())
+        assert 1 < tasks < b  # some task holds several of a doc's ranges
+    else:
+        assert D._shingle_ranges(docs) == 1
+    if case == "tiny_budget":
+        monkeypatch.setattr(D, "PAIR_BUDGET", 3)
+    threshold = 0.2
+    want = _ngram_reference(rows, threshold, cap)
+    got = {(a, b): j for a, b, j in D.ngram_jaccard_pairs(
+        docs, threshold=threshold, max_shingle_df=cap).collect()}
+    assert set(got) == set(want)
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in want)
+    assert any(a >= 2 ** 32 or a < 0 or b >= 2 ** 32 or b < 0
+               for a, b in want)
+    kept_pairs = {k for k in want if set(k) <= hot_kept}
+    dropped_pairs = {k for k in want if set(k) <= hot_dropped}
+    assert len(kept_pairs) == _NGRAM_CAP * (_NGRAM_CAP - 1) // 2
+    if cap is None:
+        assert len(dropped_pairs) == _NGRAM_CAP * (_NGRAM_CAP + 1) // 2
+    else:
+        assert not dropped_pairs
+
+
+def test_ngram_jaccard_range_constants(spark, tmp_path, monkeypatch):
+    """B = ceil(plan size estimate / RANGE_BYTES), read from a widened
+    parquet scan as the registered queries build it. The constants
+    are the bounds SCALE.md quotes; 4 MiB is ~7x the largest documents
+    table of the test data (sf0.1 estimates 594,568 B), so every
+    parquet input here runs one range."""
+    from document_extractor_spark.operators import dedup as D
+
+    assert D.RANGE_BYTES == 4 << 20 and D.PAIR_BUDGET == 20_000
+    path = str(tmp_path / "docs")
+    spark.range(200).selectExpr(
+        "id AS doc_id", "repeat('a b ', id) AS text").write.parquet(path)
+    docs = D.widen_narrow_input(spark.read.parquet(path))
+    est = int(str(docs._jdf.queryExecution().optimizedPlan().stats()
+                  .sizeInBytes()))
+    assert D._shingle_ranges(docs) == 1
+    monkeypatch.setattr(D, "RANGE_BYTES", est)
+    assert D._shingle_ranges(docs) == 1
+    monkeypatch.setattr(D, "RANGE_BYTES", est - 1)
+    assert D._shingle_ranges(docs) == 2
+
+
 def test_ivf_build_once_query_many(spark, emb, monkeypatch):
     """The build/query split must fit k-means exactly once for any
     number of queries (the per-query-refit anti-pattern is gone)."""
