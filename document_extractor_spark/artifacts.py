@@ -150,8 +150,7 @@ def rendered_docs(extracted: DataFrame,
     )
 
 
-def chunked_docs(rendered: DataFrame,
-                 max_bytes: int = 3_000_000) -> DataFrame:
+def chunked_docs(rendered: DataFrame, max_bytes: int) -> DataFrame:
     """Greedy never-split chunk assignment over rendered blocks.
 
     Matches the reference's accounting exactly (output_writer.py:
@@ -306,10 +305,8 @@ def write_jsonl_shards(
 # set and QUOTE_ALL quoting (common.py:140-155: ["filename", "page",
 # "text", "method", "used_ocr", "reliability"], csv.QUOTE_ALL), text
 # cleaned by the R7 clean_text projection (common_pdf.sh:37).  Built
-# entirely from JVM string expressions — zero shuffles until the
-# writer's one repartition.
+# entirely from JVM string expressions — zero shuffles.
 # ---------------------------------------------------------------------------
-CSV_INDEX_HEADER = '"filename","page","text","method","used_ocr","reliability"'
 
 
 def csv_index_lines(extracted: DataFrame) -> DataFrame:
@@ -361,32 +358,6 @@ def csv_index_lines(extracted: DataFrame) -> DataFrame:
                     F.lit(","), _q(used), F.lit(","), _q(rel_s))
     return extracted.select(
         "url", "run_id", "page", line.alias("csv_line"))
-
-
-def write_csv_index(extracted: DataFrame, out_dir: str) -> None:
-    """Write `out_dir/run_id=X/part-*.txt` — one CSV index stream per
-    run with the reference's header row first (common.py:149-152) and
-    CRLF line endings (csv module default). One shuffle
-    (`repartition(run_id)`), rows in (url, page) order so the bytes
-    are deterministic regardless of input partitioning."""
-    ok = extracted.filter(F.col("status") == "OK")
-    lines = csv_index_lines(ok).select(
-        "run_id",
-        F.lit(1).alias("ord"), "url",
-        F.coalesce(F.col("page").cast("long"), F.lit(-1)).alias("pg"),
-        F.col("csv_line"))
-    headers = (lines.select("run_id").distinct()
-               .select("run_id", F.lit(0).alias("ord"),
-                       F.lit("").alias("url"),
-                       F.lit(-1).cast("long").alias("pg"),
-                       F.lit(CSV_INDEX_HEADER).alias("csv_line")))
-    (headers.unionByName(lines)
-     .repartition("run_id")
-     .sortWithinPartitions("run_id", "ord", "url", "pg")
-     # the text sink appends '\n'; pre-append '\r' for csv CRLF parity
-     .select("run_id", F.concat(F.col("csv_line"), F.lit("\r"))
-             .alias("value"))
-     .write.mode("overwrite").partitionBy("run_id").text(out_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -82,8 +82,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--export-chunks", metavar="DIR", default=None,
                     help="also export combined chunk .txt files "
                          "(S7 tail: rendered blocks greedily packed, "
-                         "one file per chunk)")
-    ap.add_argument("--max-chunk-bytes", type=int, default=3_000_000)
+                         "one file per chunk of at most env "
+                         "MAX_COMBINED_BYTES)")
     ap.add_argument("--compact", action="store_true",
                     help="after committing, bin-pack each output "
                          "table's small files (streaming/incremental "
@@ -143,7 +143,7 @@ def main(argv: list[str] | None = None) -> int:
         from .artifacts import chunked_docs, rendered_docs, write_chunks
 
         rendered = rendered_docs(result.extracted)
-        write_chunks(chunked_docs(rendered, args.max_chunk_bytes),
+        write_chunks(chunked_docs(rendered, cfg.max_combined_bytes),
                      args.export_chunks)
     jsonl_summary = {}
     if args.export_jsonl:

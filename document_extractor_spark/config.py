@@ -54,7 +54,6 @@ class PipelineConfig:
         default_factory=lambda: _env_float("PASS_HTML_LENIENT_CUTOFF", 0.60))
     html_raw_cutoff: float = field(
         default_factory=lambda: _env_float("PASS_HTML_RAW_CUTOFF", 0.30))
-    txt_cutoff: float = 0.0  # reference pass_txt.py always accepts (rc=0)
     # reference pass_doc.py:203 PASS_DOCX_CUTOFF (docx is slightly more
     # lenient than .doc by default)
     docx_cutoff: float = field(
@@ -126,13 +125,9 @@ class PipelineConfig:
     min_stopword_ratio: float = field(
         default_factory=lambda: _env_float("MIN_STOPWORD_RATIO", 0.0))
 
-    # --- partitioning / skew (north_rule: url-hash buckets + salting)
+    # --- partitioning (north_rule: url-hash buckets)
     url_hash_buckets: int = field(
         default_factory=lambda: _env_int("URL_HASH_BUCKETS", 0))  # 0 = leave to AQE
-    salt_factor: int = field(default_factory=lambda: _env_int("SALT_FACTOR", 16))
-
-    # --- Arrow batching: rows carry multi-KB binaries, keep batches small
-    arrow_max_records_per_batch: int = 1024
 
     run_id: str = "run-000"
 

@@ -20,20 +20,14 @@ import re
 import statistics
 from typing import Iterable, Sequence
 
-import pandas as pd
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # Unicode alphanumeric exactly as Python's str.isalnum: stdlib re's
 # \w is implemented as Py_UNICODE_ISALNUM(ch) || ch == '_', so
 # [^\W_] == isalnum per-char — same interpreter Unicode tables as the
 # reference (the third-party `regex` module ships *newer* tables and
-# diverges on recently-assigned codepoints, e.g. U+13460).
-_ALNUM_RE = re.compile(r"[^\W_]")
-# run form of the same class: sum of run lengths == per-char match
-# count, but natural text matches once per WORD instead of once per
-# char (~1.6x on the kernel's hottest non-parse path)
+# diverges on recently-assigned codepoints, e.g. U+13460). Run form:
+# sum of run lengths == per-char match count, but natural text matches
+# once per WORD instead of once per char (~1.6x on the kernel's
+# hottest non-parse path)
 _ALNUM_RUN_RE = re.compile(r"[^\W_]+")
 
 
@@ -45,41 +39,6 @@ def score_reliability(text: str | None) -> float:
     alnum = sum(map(len, _ALNUM_RUN_RE.findall(text)))
     s = max(0.0, min(1.0, alnum / float(total)))
     return round(s, 4)
-
-
-def score_reliability_series(texts: pd.Series) -> pd.Series:
-    """Vectorized scorer for pandas-UDF stages.
-
-    Per-row compiled-regex findall (C speed) — no per-char Python.
-    """
-    def _one(t: object) -> float:
-        if not isinstance(t, str) or not t:
-            return 0.0
-        return round(min(1.0, sum(map(len, _ALNUM_RUN_RE.findall(t)))
-                     / float(len(t))), 4)
-
-    return texts.map(_one).astype("float64")
-
-
-def score_reliability_col(text: Column) -> Column:
-    """JVM-side scorer (whole-stage-codegen path, no Python worker).
-
-    Java regex \\p{L}\\p{N} are Unicode classes by default, matching
-    the Python semantics for BMP text. Used where the column is
-    already a string and no pandas stage is in flight.
-    """
-    stripped = F.regexp_replace(text, r"[^\p{L}\p{N}]", "")
-    total = F.length(text)
-    return F.when(
-        text.isNull() | (total == 0), F.lit(0.0)
-    ).otherwise(
-        # bround = HALF_EVEN, matching Python's round() in the scalar
-        # scorer: plain F.round (HALF_UP) flips exactly-representable
-        # ties like 5/32 = 0.15625 -> 0.1563 vs Python 0.1562
-        F.bround(
-            F.least(F.lit(1.0), F.length(stripped) / total.cast("double")), 4
-        )
-    )
 
 
 def exact_median(values: Iterable[float | None]) -> float:

@@ -48,10 +48,6 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
     return None
 
 
-def table_backend(spark: SparkSession) -> str:
-    return "iceberg" if iceberg_catalog(spark) else "parquet"
-
-
 def _local_root(root: str) -> str:
     """OS path for a driver-local root: the maintenance ops accept
     `file:`-scheme URIs (Spark's canonical local form) but run
@@ -238,80 +234,3 @@ def compact_table(spark: SparkSession, name: str, root: str,
     files_after, _ = _scan(path)
     return {"backend": "parquet", "files_before": files_before,
             "files_after": files_after, "bytes": total, "rows": rows}
-
-
-# ---------------------------------------------------------------------------
-# S11 (r5): run-dir cleanup (reference process_run.py:205-300 — NB the
-# reference duplicates its own cleanup block verbatim at :249-280;
-# implemented once here).  This is ingest-side filesystem maintenance
-# for the watcher/drop-dir deployment shape (streaming.py source):
-# after a run's files are consumed, junk files are removed, empty
-# subdirectories pruned bottom-up, and the run directory itself is
-# removed only when (a) it is not the input root and (b) its parent
-# IS the input root and (c) it is empty — leaving a ghost dir would
-# re-trigger the watcher's scan, exactly the reference's concern.
-# ---------------------------------------------------------------------------
-JUNK_FILES = (".DS_Store", "Thumbs.db")
-
-
-def cleanup_run_dir(run_dir: str, input_root: str) -> dict:
-    """Prune a consumed run directory; returns the action counters
-    `{junk_removed, dirs_removed, run_dir_removed}`.
-
-    Every step is best-effort (the reference swallows all cleanup
-    errors — a cleanup failure must never fail the run) and the
-    removal preconditions are re-checked on the resolved paths so a
-    symlinked or mis-joined run_dir cannot delete outside the input
-    root. The reference's portfolio stash pruning has no analog:
-    container children are dispatched in-memory by the extraction
-    kernel (operators/extract_branches), never stashed to disk."""
-    import os
-    from pathlib import Path
-
-    counters = {"junk_removed": 0, "dirs_removed": 0,
-                "run_dir_removed": False}
-    try:
-        run_p = Path(run_dir).resolve()
-        root_p = Path(input_root).resolve()
-    except Exception:
-        return counters
-
-    # containment gate BEFORE the walk: junk unlink + empty-dir prune
-    # must also stay inside the input root, not just the final rmdir —
-    # a symlinked or mis-joined run_dir otherwise gets its whole tree
-    # swept (resolve() above already chased symlinks, so this compares
-    # physical paths)
-    if run_p != root_p and root_p not in run_p.parents:
-        return counters
-
-    # junk files anywhere under the run dir (reference removes them
-    # so an otherwise-empty dir can be rmdir'd)
-    for base, _dirs, files in os.walk(run_p, topdown=False):
-        for name in files:
-            if name in JUNK_FILES:
-                try:
-                    os.unlink(os.path.join(base, name))
-                    counters["junk_removed"] += 1
-                except OSError:
-                    pass
-        # prune empty subdirs bottom-up (never the run dir itself here)
-        bp = Path(base)
-        if bp != run_p:
-            try:
-                bp.rmdir()  # fails (caught) unless empty
-                counters["dirs_removed"] += 1
-            except OSError:
-                pass
-
-    if run_p != root_p and run_p.parent == root_p:
-        try:
-            next(run_p.iterdir())
-        except StopIteration:
-            try:
-                run_p.rmdir()
-                counters["run_dir_removed"] = True
-            except OSError:
-                pass
-        except OSError:
-            pass
-    return counters

@@ -12,8 +12,7 @@ straddle the boundary. We express it as ``applyInPandas`` per run
 (one sequential scan per group — the group is a *run*, matching the
 reference's per-run chunk files; a run's chunk index must be globally
 sequential anyway, so this parallelizes across runs, which is the
-correct unit at scale). A windowed cumulative-sum approximation is
-exposed for the SQL-oracle comparison (chunk_by_cumsum).
+correct unit at scale).
 
 Rendering: `render_doc_text` reproduces the reference's per-document
 .txt block byte-for-byte (output_writer.py:168-193): `# key: value`
@@ -24,7 +23,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -70,7 +69,7 @@ DOCUMENT_BREAK = "----- DOCUMENT BREAK -----\n\n"  # output_writer.py:219
 
 def assign_chunks(
     docs: DataFrame,
-    max_bytes: int = 3_000_000,
+    max_bytes: int,
     run_col: str = "run_id",
     order_col: str = "url",
     size_col: str = "doc_bytes",
@@ -109,27 +108,6 @@ def assign_chunks(
         return pdf
 
     return docs.groupBy(run_col).applyInPandas(pack, schema=schema)
-
-
-def chunk_by_cumsum(
-    docs: DataFrame,
-    max_bytes: int = 3_000_000,
-    run_col: str = "run_id",
-    order_col: str = "url",
-    size_col: str = "doc_bytes",
-) -> DataFrame:
-    """Window cumulative-sum approximation of chunk assignment —
-    SQL-expressible (oracle pair), boundary docs may straddle."""
-    w = (
-        Window.partitionBy(run_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return docs.withColumn(
-        "chunk_id",
-        (F.floor((F.sum(size_col).over(w) - 1) / F.lit(max_bytes)) + 1)
-        .cast("integer"),
-    )
 
 
 def token_windows(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import seed_hash, shingles_col, tokens_col, widen_narrow_input
+from .dedup import seed_hash, shingles_col, tokens_col
 
 NGRAM_N = 13  # the published decontamination convention (GPT-3 app. C)
 _SEED = 23
@@ -64,7 +64,7 @@ def decontaminate_marks(docs: DataFrame, bench_grams: DataFrame,
     projection: the hit table is bounded by contaminated docs, which
     AQE broadcasts when small and shuffles uniformly otherwise.
     """
-    grams = widen_narrow_input(docs).select(
+    grams = docs.select(
         F.col(id_col),
         F.explode(shingles_col(tokens_col(text_col), n)).alias("g")
     ).select(F.col(id_col), seed_hash(F.col("g"), _SEED).alias("gram"))

@@ -366,7 +366,7 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     ONE shuffle: no pre-explode distinct — min() is idempotent over
     duplicate tokens, so deduplicating first would only add a shuffle
     for an identical result."""
-    toks = widen_narrow_input(docs).select(
+    toks = docs.select(
         F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
     aggs = [F.min(seed_hash(F.col("tok"), s)).alias(f"mh_{s}")
             for s in range(k)]
@@ -522,7 +522,7 @@ def minhash_incremental_decision(new_docs: DataFrame,
             .select("id_new", "id_seen"))
     # token sets verify as 60-bit hashes (identical cardinalities
     # modulo 2^-60 collisions — see tokhash_set_col)
-    toks = lambda d, name: widen_narrow_input(d).select(  # noqa: E731
+    toks = lambda d, name: d.select(  # noqa: E731
         F.col(id_col).alias(name),
         tokhash_set_col(text_col).alias(f"toks_{name}"))
     # join ORDER is the guide-§8 move: attach the seen-side arrays
@@ -585,7 +585,7 @@ def minhash_verified_pairs(docs: DataFrame, id_col: str = "doc_id",
         docs, id_col, text_col, k, bands, max_bucket_df)
     # token sets verify as 60-bit hashes (identical cardinalities
     # modulo 2^-60 collisions — see tokhash_set_col)
-    toksets = widen_narrow_input(docs).select(
+    toksets = docs.select(
         F.col(id_col).alias("id"),
         tokhash_set_col(text_col).alias("toks"))
     if checkpoint_result:
@@ -1033,7 +1033,7 @@ def dup_window_spans(docs: DataFrame, id_col: str = "doc_id",
     posting-list row unbounded, while re-tokenizing is linear CPU.
     3 shuffles, zero Python stages.
     """
-    toks = widen_narrow_input(docs).select(
+    toks = docs.select(
         F.col(id_col), tokens_col(text_col).alias("t"))
     wins = toks.select(
         F.col(id_col),

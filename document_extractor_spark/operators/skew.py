@@ -15,13 +15,8 @@ still re-plan around it.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def domain_of(url: Column) -> Column:
-    """https://host/path -> host (pure JVM expression)."""
-    return F.regexp_extract(url, r"^[a-z]+://([^/]+)/", 1)
 
 
 def salted_agg(
@@ -68,20 +63,3 @@ def salted_agg(
         .agg(*phase1_aggs)
     )
     return partials.groupBy(key).agg(*phase2_aggs)
-
-
-def domain_stats_salted(extracted: DataFrame,
-                        salt_factor: int = 16) -> DataFrame:
-    """Per-domain doc/byte counts with salted two-phase aggregation."""
-    withdom = extracted.withColumn("domain", domain_of(F.col("url")))
-    return salted_agg(
-        withdom, "domain",
-        {
-            "docs": ("count", "url"),
-            "bytes_extracted": ("sum", F.coalesce(
-                F.octet_length("text"), F.lit(0)).cast("long")),
-            "max_reliability": ("max", "reliability"),
-        },
-        salt_factor=salt_factor,
-        unique_key="url",
-    )

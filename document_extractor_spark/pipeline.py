@@ -16,7 +16,7 @@ process_run -> pass_* -> output_writer DAG, SURVEY.md §3):
           ├─ quarantine table (ERROR rows + unsupported)
           └─ metrics per partition (north_rule counters)
 
-Physical plan (branch_stream): ONE Arrow mapInPandas stage dispatches
+Physical plan (run_extraction): ONE Arrow mapInPandas stage dispatches
 per row on the JVM-sniffed fmt and short-circuits the cascade
 internally; portfolio children are re-dispatched inline (depth 1).
 One scan, one Python stage, zero duplicate work — the right shape at
@@ -97,16 +97,6 @@ def bucket_by_url_hash(df: DataFrame, buckets: int) -> DataFrame:
     return df.repartition(buckets, F.pmod(F.xxhash64("url"), F.lit(buckets)))
 
 
-def branch_stream(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The extraction plan: JVM sniff, then ONE Arrow mapInPandas stage
-    that dispatches per row on fmt. Shared by the batch pipeline and
-    the streaming plan (extracted_stream), so both run the same
-    branch stream."""
-    sniffed = pages.withColumn(
-        "fmt", sniff_format(F.col("html"), F.col("text")))
-    return sniffed.mapInPandas(make_extract_any(cfg), schema=BRANCH_SCHEMA)
-
-
 def pages_repr() -> Column:
     """A7 granularity switch + E12 page-concat as ONE array column:
     per-page rows keep their pages, per-doc rows become a single
@@ -127,10 +117,7 @@ def pages_repr() -> Column:
 
 
 def granularity_project(branches: DataFrame, run_id: str) -> DataFrame:
-    """Explode pages_repr() into extracted rows in ONE pass.  Shared
-    VERBATIM by the batch pipeline and the streaming plan
-    (extracted_stream) — stream==batch depends on these being the same
-    expressions, so there is exactly one copy."""
+    """Explode pages_repr() into extracted rows in ONE pass."""
     return (
         branches.filter(F.col("fmt") != FMT_UNSUPPORTED)
         .select(
@@ -166,7 +153,9 @@ def run_extraction(
 
     pages = pages.select(*_PAGES_COLS)
     pages = bucket_by_url_hash(pages, cfg.url_hash_buckets)
-    branches = branch_stream(pages, cfg)
+    branches = pages.withColumn(
+        "fmt", sniff_format(F.col("html"), F.col("text"))
+    ).mapInPandas(make_extract_any(cfg), schema=BRANCH_SCHEMA)
 
     if persist:
         branches = branches.persist(StorageLevel.MEMORY_AND_DISK)

@@ -5,12 +5,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+ARROW_MAX_RECORDS_PER_BATCH = 1024
+
 
 def build_session(
     app_name: str = "document-extractor-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_max_records_per_batch: int = 1024,
 ) -> SparkSession:
     """local[N] session with the confs the engine relies on.
 
@@ -25,19 +25,17 @@ def build_session(
     """
     if cores is None:
         cores = int(os.getenv("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 32)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 32)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records_per_batch),
+            str(ARROW_MAX_RECORDS_PER_BATCH),
         )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # guide §3.1: allow shuffled-hash join where its size

@@ -5,15 +5,15 @@ go quiet (inotify 15 s / sleep 15 s), snapshot entries, process, and
 delete-on-success so files are seen once (entrypoint.sh:92-158).
 
 Spark mapping (S1): a file-source `readStream` over the pages
-directory. New parquet files are discovered per micro-batch; the
+directory (`read_pages_stream`) or over a directory of WARC files
+(`read_warc_stream`). New files are discovered per micro-batch; the
 streaming checkpoint replaces delete-on-success with exactly-once
-file tracking; `Trigger.AvailableNow` reproduces "drain whatever is
-there now, then stop" (one watcher cycle), while a processingTime
-trigger reproduces the 15 s poll cadence. The extraction plan is the
-SAME fused pipeline — mapInPandas and the granularity explode are
-streaming-compatible (no aggregation in the path, so append mode
-needs no watermark; the metrics table is written per-batch via
-foreachBatch).
+file tracking. `run_watcher` drives either source through the batch
+pipeline per micro-batch (foreachBatch, all three tables): with
+`poll_secs=None` it is one watcher cycle (`Trigger.AvailableNow`:
+drain whatever is there now, then stop); with a number it is the
+daemon, polling at that cadence (processingTime, the reference's
+INPUT_CHECK_INTERVAL, entrypoint.sh:30-31).
 """
 from __future__ import annotations
 
@@ -33,19 +33,6 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(input_dir)
-
-
-def extracted_stream(pages_stream: DataFrame,
-                     cfg: PipelineConfig | None = None) -> DataFrame:
-    """The extraction plan applied to a streaming DataFrame: the same
-    pipeline.branch_stream and granularity_project calls as
-    run_extraction, minus the batch-only repartition/persist (a
-    streaming micro-batch is already split by its source files).
-    """
-    cfg = cfg or PipelineConfig()
-    from .pipeline import branch_stream, granularity_project
-
-    return granularity_project(branch_stream(pages_stream, cfg), cfg.run_id)
 
 
 def _make_batch_writer(output_dir: str, cfg: PipelineConfig):
@@ -91,75 +78,27 @@ def _make_batch_writer(output_dir: str, cfg: PipelineConfig):
     return write_batch
 
 
-def run_watcher_once(
-    spark: SparkSession,
-    input_dir: str,
+def run_watcher(
+    stream: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
     cfg: PipelineConfig | None = None,
+    poll_secs: float | None = None,
 ) -> StreamingQuery:
-    """One watcher cycle: drain all currently-available input files
-    (Trigger.AvailableNow) through the full pipeline, exactly once —
-    extracted + quarantine + metrics land per micro-batch."""
-    cfg = cfg or PipelineConfig()
+    """Run the full pipeline over `stream` (read_pages_stream or
+    read_warc_stream) exactly once per input file: extracted +
+    quarantine + metrics land per micro-batch. `poll_secs=None` drains
+    the files present now and stops (Trigger.AvailableNow); a number
+    polls at that cadence until the query is stopped. Restarting with
+    the same checkpoint skips files already committed."""
+    trigger = ({"availableNow": True} if poll_secs is None
+               else {"processingTime": f"{poll_secs} seconds"})
     return (
-        read_pages_stream(spark, input_dir)
-        .writeStream.foreachBatch(_make_batch_writer(output_dir, cfg))
+        stream.writeStream
+        .foreachBatch(_make_batch_writer(output_dir, cfg or PipelineConfig()))
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+        .trigger(**trigger)
         .start()
-    )
-
-
-def run_watcher_continuous(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    poll_secs: int = 15,
-    cfg: PipelineConfig | None = None,
-) -> StreamingQuery:
-    """The long-running daemon: poll cadence mirrors the reference's
-    INPUT_CHECK_INTERVAL (entrypoint.sh:30-31)."""
-    cfg = cfg or PipelineConfig()
-    return (
-        read_pages_stream(spark, input_dir)
-        .writeStream.foreachBatch(_make_batch_writer(output_dir, cfg))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{poll_secs} seconds")
-        .start()
-    )
-
-
-def windowed_event_rollup(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window rollup for late/out-of-order events.
-
-    The streaming twin of the batch ``hourly_rollup`` query: group by
-    event-time window + event_type with a watermark bounding how late
-    a row may arrive. In append mode a window is emitted exactly once,
-    when the watermark passes its end — rows later than the watermark
-    are dropped, which is the documented trade: bounded state (the
-    10^12-event case can't keep every window open) for a quantified
-    lateness horizon. Works on batch DataFrames too (watermark is a
-    no-op there), so stream==batch comparisons stay one code path.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
     )
 
 
@@ -204,11 +143,11 @@ def dedup_pages_stream(
 
 
 # ---------------------------------------------------------------------------
-# WARC watcher: the crawl-facing variant of the S1 loop. The watched
+# WARC source: the crawl-facing variant of the S1 loop. The watched
 # directory holds raw .warc/.warc.gz files (Common Crawl delivery
 # format) instead of a parquet pages table; each micro-batch explodes
-# the newly-arrived files' response records into the pages shape and
-# runs the same foreachBatch three-table sink.
+# the newly-arrived files' response records into the pages shape for
+# run_watcher's three-table sink.
 # ---------------------------------------------------------------------------
 _BINARY_FILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, "
@@ -244,23 +183,3 @@ def read_warc_stream(spark: SparkSession, warc_dir: str,
         F.xxhash64("path").alias("warc_id"),
         F.col("content").alias("warc"))
     return warc_pages(raw)
-
-
-def run_warc_watcher_once(
-    spark: SparkSession,
-    warc_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: PipelineConfig | None = None,
-) -> StreamingQuery:
-    """Drain all currently-present WARC files through the full
-    pipeline exactly once (Trigger.AvailableNow); restarting with the
-    same checkpoint skips files already committed."""
-    cfg = cfg or PipelineConfig()
-    return (
-        read_warc_stream(spark, warc_dir)
-        .writeStream.foreachBatch(_make_batch_writer(output_dir, cfg))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

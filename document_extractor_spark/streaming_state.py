@@ -151,79 +151,3 @@ def stateful_sessions(events_stream: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming heavy hitters: a token-sharded Space-Saving sketch
-# maintained ACROSS micro-batches. Each hash bucket's bounded counter
-# set lives in group state (three parallel arrays), so a continuous
-# crawl keeps running token frequencies without ever holding the open
-# vocabulary: per-bucket memory is `capacity` counters, total state
-# is n_buckets * capacity rows, and every micro-batch emits each
-# updated bucket's full current sketch (update mode). With
-# per-bucket capacity >= the bucket's vocabulary nothing evicts and
-# the state holds EXACT running counts — the stream==batch pytest
-# pins that against the batch groupBy on the same replayed input.
-# ---------------------------------------------------------------------------
-HH_STATE_SCHEMA = "tokens array<string>, ests array<long>, errs array<long>"
-HH_OUT_SCHEMA = "bucket long, token string, est long, err long"
-
-
-def make_hh_updater(capacity: int):
-    from .operators.heavyhitters import space_saving
-
-    def update_fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        bucket = int(key[0])
-        counts: dict = {}
-        if state.exists:
-            toks, ests, errs = state.get
-            counts = {t: (int(e), int(r))
-                      for t, e, r in zip(toks, ests, errs)}
-        update, _ = space_saving(counts, capacity)
-        for pdf in pdfs:
-            for tok in pdf["token"]:
-                if tok is not None:  # defense in depth vs the filter
-                    update(tok)
-        items = sorted(counts.items())
-        state.update((
-            [t for t, _ in items],
-            [e for _, (e, _) in items],
-            [r for _, (_, r) in items],
-        ))
-        yield pd.DataFrame(
-            [(bucket, t, e, r) for t, (e, r) in items],
-            columns=["bucket", "token", "est", "err"])
-
-    return update_fn
-
-
-def streaming_heavy_hitters(
-    token_stream: DataFrame,
-    capacity: int = 4096,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """`(... token string ...)` stream → per-bucket running sketch
-    rows, one state group per hash bucket. No timeout: token
-    frequency state is the PRODUCT here, not a window — it lives for
-    the query's lifetime and is bounded by n_buckets * capacity.
-    """
-    # NULL tokens must never reach the sketch: xxhash64(NULL) is the
-    # (non-null) seed hash, so a NULL row would arrive as None and
-    # blow up the sorted()/heap ordering inside the updater, killing
-    # the whole streaming query on one bad row
-    bucketed = token_stream.filter(F.col("token").isNotNull()).select(
-        F.pmod(F.xxhash64("token"), F.lit(n_buckets)).alias("bucket"),
-        "token")
-    return (
-        bucketed.groupBy("bucket")
-        .applyInPandasWithState(
-            make_hh_updater(capacity),
-            outputStructType=HH_OUT_SCHEMA,
-            stateStructType=HH_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )

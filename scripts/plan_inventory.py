@@ -32,6 +32,14 @@ def count(plan: str, token: str) -> int:
     return len(re.findall(re.escape(token), plan))
 
 
+def count_shuffles(plan: str) -> int:
+    """Every shuffle Exchange node of the plan tree, whatever its
+    partitioning (hash, range, round-robin, single partition).
+    BroadcastExchange and ReusedExchange nodes are not shuffles of
+    their own."""
+    return len(re.findall(r"^[ :|+\-]*Exchange ", plan, re.M))
+
+
 def main() -> None:
     spark = build_session(app_name="plan-inventory", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -43,11 +51,9 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover
             rows.append((name, f"ERROR: {str(exc)[:60]}"))
             continue
-        shuffles = count(plan, "Exchange hashpartitioning") + count(
-            plan, "Exchange rangepartitioning")
         rows.append((
             name,
-            shuffles,
+            count_shuffles(plan),
             count(plan, "ArrowEvalPython") + count(plan, "BatchEvalPython")
             + count(plan, "MapInPandas") + count(plan, "MapInArrow")
             + count(plan, "FlatMapGroupsInPandas"),
@@ -64,9 +70,11 @@ def main() -> None:
     print("Every number is read from the EXECUTED plan of the registered")
     print("driver query, not from design intent. Columns:")
     print()
-    print("- **shuffles**: hash/range Exchanges — each is a full network")
-    print("  repartition of its input at cluster scale; the count is the")
-    print("  thing to budget, and AQE coalesces their partition counts.")
+    print("- **shuffles**: Exchanges of any partitioning (hash, range,")
+    print("  round-robin widen, single partition) — each is a full")
+    print("  network repartition of its input at cluster scale; the count")
+    print("  is the thing to budget, and AQE coalesces their partition")
+    print("  counts.")
     print("- **py stages**: Arrow-batched Python operators (the engine's")
     print("  rule: at most ONE in the extraction path; 0 = pure JVM).")
     print("- **bcast / smj**: broadcast vs shuffle joins. Dim tables must")
@@ -107,10 +115,9 @@ def main() -> None:
     print("`ngram_jaccard` and the pipelines built on it send their"
           " per-doc shingle arrays through one exchange into a"
           " `mapInArrow` pair kernel. With one shingle range (every"
-          " input here) that exchange is `SinglePartition`, which the"
-          " shuffles column does not count, and the per-pair merge"
-          " after the kernel needs no exchange; with B > 1 ranges both"
-          " are hash exchanges.")
+          " input here) that exchange is `SinglePartition` and the"
+          " per-pair merge after the kernel needs no exchange; with"
+          " B > 1 ranges both are hash exchanges.")
     print()
     if bad:
         print(f"**ATTENTION: unexpected nested-loop or error in: {bad}**")
@@ -134,6 +141,7 @@ def print_memory_budget() -> None:
     from document_extractor_spark.config import DEFAULT_CONFIG
     from document_extractor_spark.operators.dedup import (
         PAIR_BUDGET, RANGE_BYTES)
+    from document_extractor_spark.session import ARROW_MAX_RECORDS_PER_BATCH
 
     occ = RANGE_BYTES * 0.43  # (doc, shingle) occurrences per range
     print()
@@ -169,9 +177,9 @@ def print_memory_budget() -> None:
     print()
     print(f"Arrow batches are additionally capped at"
           f" `spark.sql.execution.arrow.maxRecordsPerBatch="
-          f"{DEFAULT_CONFIG.arrow_max_records_per_batch}` (binary-heavy"
+          f"{ARROW_MAX_RECORDS_PER_BATCH}` (binary-heavy"
           f" rows; session.py) so a Python worker never materializes more"
-          f" than ~{DEFAULT_CONFIG.arrow_max_records_per_batch} rows x"
+          f" than ~{ARROW_MAX_RECORDS_PER_BATCH} rows x"
           f" ~1 MiB payload per batch.")
 
 

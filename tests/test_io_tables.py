@@ -3,10 +3,10 @@
 
 def test_parquet_roundtrip(spark, tmp_path):
     from document_extractor_spark.io_tables import (
-        read_table, table_backend, write_table,
+        iceberg_catalog, read_table, write_table,
     )
 
-    assert table_backend(spark) == "parquet"  # sandbox has no catalog
+    assert iceberg_catalog(spark) is None  # sandbox: parquet backend
     df = spark.range(5).withColumnRenamed("id", "x")
     ident = write_table(df, "t1", str(tmp_path))
     assert ident == f"{tmp_path}/t1"
@@ -21,9 +21,7 @@ def test_parquet_roundtrip(spark, tmp_path):
 
 
 def test_iceberg_catalog_detection(spark):
-    from document_extractor_spark.io_tables import (
-        iceberg_catalog, table_backend,
-    )
+    from document_extractor_spark.io_tables import iceberg_catalog
 
     assert iceberg_catalog(spark) is None
     spark.conf.set("spark.sql.catalog.lake",
@@ -32,7 +30,6 @@ def test_iceberg_catalog_detection(spark):
     spark.conf.set("spark.sql.catalog.lake.type", "hadoop")
     try:
         assert iceberg_catalog(spark) == "lake"
-        assert table_backend(spark) == "iceberg"
     finally:
         spark.conf.unset("spark.sql.catalog.lake")
         spark.conf.unset("spark.sql.catalog.lake.type")

@@ -239,24 +239,6 @@ def test_salted_agg_matches_plain(spark):
     assert (salted.mx == plain.mx).all()
 
 
-def test_domain_stats_salted(spark, extraction):
-    """Domain stats over the extracted corpus: salted result equals a
-    plain pandas recompute, and hot domains dominate (skew exists)."""
-    from document_extractor_spark.operators.skew import domain_stats_salted
-
-    ext = extraction["extracted"].drop(columns=["spans"])
-    got = (
-        domain_stats_salted(spark.createDataFrame(ext), salt_factor=8)
-        .toPandas().set_index("domain").sort_index()
-    )
-    want = ext.copy()
-    want["domain"] = want.url.str.extract(r"^[a-z]+://([^/]+)/")
-    want_docs = want.groupby("domain").url.count()
-    assert (got.docs.sort_index() == want_docs.sort_index()).all()
-    hot = got.docs.sort_values(ascending=False)
-    assert hot.iloc[0] > hot.iloc[-1]  # skewed by construction
-
-
 from document_extractor_spark.operators.multimodal import (  # noqa: E402
     build_mp4 as _mp4,
     build_png as _png,

@@ -1,13 +1,11 @@
-"""Round-5 run-maintenance surface: the CSV index sink (S5/R7), the
-single-file-run naming rule (S4), the low-disk OCR guard (R6), and
-run-dir cleanup (S11) — reference process_run.py:111-122/205-300,
-common.py:123-155, common_pdf.sh:37, pass_pdf.py:168-173."""
+"""Round-5 run-maintenance surface: the CSV index rows (S5/R7), the
+single-file-run naming rule (S4) and the low-disk OCR guard (R6) —
+reference process_run.py:111-122, common.py:123-155,
+common_pdf.sh:37, pass_pdf.py:168-173."""
 from __future__ import annotations
 
 import csv
-import glob
 import io
-import os
 
 import duckdb
 import pytest
@@ -15,7 +13,6 @@ from pyspark.sql import functions as F
 
 from document_extractor_spark.config import PipelineConfig
 from document_extractor_spark.functions.textnorm import csv_safe_text
-from document_extractor_spark.io_tables import cleanup_run_dir
 
 
 def _art():
@@ -74,21 +71,19 @@ def test_csv_index_cells_pinned(spark):
         "printf('%.4f', 0.03125)").fetchone() == ("0.8403", "0.0312")
 
 
-def test_write_csv_index_roundtrips_via_csv_module(spark, tmp_path):
-    out = str(tmp_path / "csv_index")
-    _art().write_csv_index(_extracted_df(spark), out)
-    files = glob.glob(f"{out}/run_id=r1/part-*.txt")
-    assert files
-    raw = b"".join(open(f, "rb").read() for f in sorted(files))
-    text = raw.decode("utf-8")
-    # reference csv module line terminator is CRLF
-    assert text.startswith(_art().CSV_INDEX_HEADER + "\r\n")
+def test_csv_index_lines_roundtrip_via_csv_module(spark):
+    """The rendered lines are exactly what the reference's csv writer
+    (QUOTE_ALL, CRLF) emits for the cells it parses them back into."""
+    ok = _extracted_df(spark).filter(F.col("status") == "OK")
+    lines = [r.csv_line for r in
+             _art().csv_index_lines(ok).orderBy("url", "page").collect()]
+    text = "".join(ln + "\r\n" for ln in lines)
     rows = list(csv.reader(io.StringIO(text)))
-    assert rows[0] == ["filename", "page", "text", "method",
-                       "used_ocr", "reliability"]
-    # ERROR row excluded; 3 OK rows, (url, page) sorted
-    assert len(rows) == 4
-    body = {(r[0], r[1]): r for r in rows[1:]}
+    assert len(rows) == 3 and all(len(r) == 6 for r in rows)
+    buf = io.StringIO()
+    csv.writer(buf, quoting=csv.QUOTE_ALL).writerows(rows)
+    assert buf.getvalue() == text
+    body = {(r[0], r[1]): r for r in rows}
     r1 = body[("doc1", "1")]
     # the \n -> literal-\n escape inverts to the original text
     assert r1[2].replace("\\n", "\n") == 'line1\nline2 "q"'
@@ -181,60 +176,3 @@ def test_low_disk_guard_permissive_with_space(spark, pages_df, extraction):
             .reset_index(drop=True))
     import pandas.testing as pdt
     pdt.assert_frame_equal(got, base)
-
-
-# ---------------------------------------------------------------- S11 -----
-def test_cleanup_run_dir_prunes_and_removes(tmp_path):
-    root = tmp_path / "input"
-    run = root / "run-001"
-    (run / "sub" / "deeper").mkdir(parents=True)
-    (run / ".DS_Store").write_bytes(b"junk")
-    (run / "sub" / "Thumbs.db").write_bytes(b"junk")
-    got = cleanup_run_dir(str(run), str(root))
-    assert got == {"junk_removed": 2, "dirs_removed": 2,
-                   "run_dir_removed": True}
-    assert not run.exists() and root.exists()
-
-
-def test_cleanup_run_dir_keeps_nonempty_and_guards_root(tmp_path):
-    root = tmp_path / "input"
-    run = root / "run-002"
-    run.mkdir(parents=True)
-    (run / "keep.txt").write_text("data")
-    got = cleanup_run_dir(str(run), str(root))
-    assert got["run_dir_removed"] is False
-    assert (run / "keep.txt").read_text() == "data"
-    # input root itself is never removed, even when empty
-    empty_root = tmp_path / "empty_root"
-    empty_root.mkdir()
-    got = cleanup_run_dir(str(empty_root), str(empty_root))
-    assert got["run_dir_removed"] is False and empty_root.exists()
-    # a dir that is not a direct child of the input root stays
-    nested = root / "a" / "b"
-    nested.mkdir(parents=True)
-    got = cleanup_run_dir(str(nested), str(root))
-    assert got["run_dir_removed"] is False and nested.exists()
-
-
-def test_cleanup_run_dir_refuses_outside_root(tmp_path):
-    """Containment gate: a run_dir outside the input root (mis-join or
-    symlink escape) must not be walked at all — no junk unlink, no
-    empty-dir prune."""
-    from document_extractor_spark.io_tables import cleanup_run_dir
-
-    root = tmp_path / "input"
-    outside = tmp_path / "elsewhere" / "runA"
-    (outside / "empty").mkdir(parents=True)
-    (outside / ".DS_Store").write_bytes(b"")
-    got = cleanup_run_dir(str(outside), str(root))
-    assert got == {"junk_removed": 0, "dirs_removed": 0,
-                   "run_dir_removed": False}
-    assert (outside / ".DS_Store").exists()
-    assert (outside / "empty").is_dir()
-
-    # symlink under the root resolving outside: also refused
-    root.mkdir()
-    link = root / "runL"
-    link.symlink_to(outside)
-    got = cleanup_run_dir(str(link), str(root))
-    assert got["junk_removed"] == 0 and (outside / ".DS_Store").exists()

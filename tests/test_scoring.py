@@ -6,7 +6,6 @@ Parity targets: reference common.py:194-203 (score_reliability),
 """
 import statistics
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -15,7 +14,6 @@ from document_extractor_spark.functions.scoring import (
     likely_scan_only,
     sample_page_indices,
     score_reliability,
-    score_reliability_series,
 )
 
 
@@ -34,14 +32,6 @@ def test_score_parity_unicode(text):
     # the regex [\p{L}\p{N}] implementation must match Python's
     # str.isalnum char-by-char semantics on arbitrary unicode
     assert score_reliability(text) == _reference_score(text)
-
-
-@given(st.lists(st.text(max_size=80), max_size=20))
-@settings(max_examples=50, deadline=None)
-def test_score_series_matches_scalar(texts):
-    s = pd.Series(texts, dtype="object")
-    out = score_reliability_series(s)
-    assert list(out) == [score_reliability(t) for t in texts]
 
 
 def test_score_bounds_and_empty():

@@ -1,6 +1,6 @@
 """Streaming watcher tests: AvailableNow drain, exactly-once via
-checkpoint, late-arriving files picked up by the next cycle
-(the Spark twin of entrypoint.sh:92-158)."""
+checkpoint, late-arriving files picked up by the next cycle, and the
+polling daemon (the Spark twin of entrypoint.sh:92-158)."""
 import os
 
 import pyarrow as pa
@@ -30,11 +30,16 @@ def stream_dirs(tmp_path, corpus):
     }
 
 
-def test_watcher_drains_and_is_exactly_once(spark, corpus, cfg, stream_dirs):
-    from document_extractor_spark.streaming import run_watcher_once
+def _watch(spark, dirs, cfg, poll_secs=None):
+    from document_extractor_spark.streaming import (
+        read_pages_stream, run_watcher)
 
-    q = run_watcher_once(spark, stream_dirs["in"], stream_dirs["out"],
-                         stream_dirs["ckpt"], cfg)
+    return run_watcher(read_pages_stream(spark, dirs["in"]), dirs["out"],
+                       dirs["ckpt"], cfg, poll_secs=poll_secs)
+
+
+def test_watcher_drains_and_is_exactly_once(spark, corpus, cfg, stream_dirs):
+    q = _watch(spark, stream_dirs, cfg)
     q.awaitTermination(120)
     ext_dir = os.path.join(stream_dirs["out"], "extracted")
     n1 = spark.read.parquet(ext_dir).count()
@@ -47,16 +52,14 @@ def test_watcher_drains_and_is_exactly_once(spark, corpus, cfg, stream_dirs):
     assert "reason" in quar.columns
 
     # second cycle with no new files: nothing re-processed
-    q2 = run_watcher_once(spark, stream_dirs["in"], stream_dirs["out"],
-                          stream_dirs["ckpt"], cfg)
+    q2 = _watch(spark, stream_dirs, cfg)
     q2.awaitTermination(120)
     assert spark.read.parquet(ext_dir).count() == n1
 
     # a late file arrives; next cycle picks up ONLY it
     _write_pages(corpus, slice(40, 60),
                  os.path.join(stream_dirs["in"], "batch1.parquet"))
-    q3 = run_watcher_once(spark, stream_dirs["in"], stream_dirs["out"],
-                          stream_dirs["ckpt"], cfg)
+    q3 = _watch(spark, stream_dirs, cfg)
     q3.awaitTermination(120)
     out = spark.read.parquet(ext_dir).toPandas()
     assert len(out) > n1
@@ -66,10 +69,8 @@ def test_watcher_drains_and_is_exactly_once(spark, corpus, cfg, stream_dirs):
 def test_stream_matches_batch(spark, corpus, cfg, stream_dirs):
     """Streaming extraction output == batch pipeline output."""
     from document_extractor_spark.pipeline import run_extraction
-    from document_extractor_spark.streaming import run_watcher_once
 
-    q = run_watcher_once(spark, stream_dirs["in"], stream_dirs["out"],
-                         stream_dirs["ckpt"], cfg)
+    q = _watch(spark, stream_dirs, cfg)
     q.awaitTermination(120)
     got = (
         spark.read.parquet(os.path.join(stream_dirs["out"], "extracted"))
@@ -86,6 +87,31 @@ def test_stream_matches_batch(spark, corpus, cfg, stream_dirs):
     assert len(got) == len(want)
     for c in got.columns:
         assert (got[c].fillna("~") == want[c].fillna("~")).all(), c
+
+
+def test_watcher_daemon_polls_until_stopped(spark, cfg, stream_dirs):
+    """poll_secs=N: a processingTime trigger that keeps running until
+    stopped; every file present is committed to all three tables."""
+    import threading
+
+    q = _watch(spark, stream_dirs, cfg, poll_secs=1)
+    # processAllAvailable takes no timeout: a stop after 120 s bounds it
+    guard = threading.Timer(120, q.stop)
+    guard.start()
+    try:
+        q.processAllAvailable()
+        assert q.isActive  # a daemon, not a one-shot drain
+        for table in ("extracted", "quarantine", "metrics"):
+            assert os.path.isdir(os.path.join(stream_dirs["out"], table))
+        out = spark.read.parquet(
+            os.path.join(stream_dirs["out"], "extracted"))
+        assert out.select("url").distinct().count() > 0
+        assert spark.read.parquet(
+            os.path.join(stream_dirs["out"], "metrics")).count() > 0
+    finally:
+        guard.cancel()
+        q.stop()
+    assert not q.isActive
 
 
 def test_streaming_dedup_first_seen_wins(spark, tmp_path):

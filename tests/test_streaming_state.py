@@ -203,77 +203,6 @@ def test_same_batch_stragglers_merge(spark, tmp_path):
     assert len(main) == 1 and main.iloc[0].n_events == 1
 
 
-def test_streaming_heavy_hitters_match_batch(spark, tmp_path):
-    """Cross-batch sketch state: two replayed micro-batches with
-    overlapping tokens accumulate; with capacity >= vocab the final
-    sketch equals the batch exact counts over BOTH batches."""
-    import collections
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from document_extractor_spark.streaming_state import (
-        streaming_heavy_hitters)
-
-    b1 = ["alpha"] * 5 + ["beta"] * 3 + ["gamma"]
-    b2 = ["alpha"] * 2 + ["gamma"] * 4 + ["delta"]
-    in_dir = tmp_path / "toks"
-    in_dir.mkdir()
-    for name, toks in [("b1.parquet", b1), ("b2.parquet", b2)]:
-        pq.write_table(
-            pa.Table.from_pydict({"token": toks},
-                                 schema=pa.schema([("token",
-                                                    pa.string())])),
-            str(in_dir / name))
-
-    stream = (
-        spark.readStream.schema("token string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(in_dir)))
-    out = streaming_heavy_hitters(stream, capacity=64, n_buckets=4)
-    q = (out.writeStream.format("memory").queryName("hh_stream")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    # LAST emission per token is the final running state
-    rows = spark.sql(
-        "select * from hh_stream").collect()
-    final = {}
-    for r in rows:  # memory sink appends per batch; later rows win
-        final[r.token] = (r.est, r.err)
-    truth = collections.Counter(b1 + b2)
-    assert {t: e for t, (e, _) in final.items()} == dict(truth)
-    assert all(err == 0 for _, err in final.values())  # exact regime
-
-
-def test_streaming_heavy_hitters_null_tokens_survive(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from document_extractor_spark.streaming_state import (
-        streaming_heavy_hitters)
-
-    in_dir = tmp_path / "toks"
-    in_dir.mkdir()
-    pq.write_table(
-        pa.Table.from_pydict(
-            {"token": ["a", None, "a", None, "b"]},
-            schema=pa.schema([("token", pa.string())])),
-        str(in_dir / "b1.parquet"))
-    stream = spark.readStream.schema("token string").parquet(str(in_dir))
-    out = streaming_heavy_hitters(stream, capacity=8, n_buckets=2)
-    q = (out.writeStream.format("memory").queryName("hh_null")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.token: r.est for r in spark.sql(
-        "select * from hh_null").collect()}
-    assert got == {"a": 2, "b": 1}  # NULLs dropped, query alive
-
-
 class _FakeState:
     """Minimal GroupState stand-in for driving the session fn directly."""
 

@@ -236,7 +236,11 @@ class TestStreamingWarcWatcher:
 
         from document_extractor_spark.config import PipelineConfig
         from document_extractor_spark.streaming import (
-            run_warc_watcher_once)
+            read_warc_stream, run_watcher)
+
+        def drain():
+            return run_watcher(read_warc_stream(spark, str(wdir)), out,
+                               ckpt, cfg)
 
         html = (
             "<html><body><main><article><h1>H</h1>"
@@ -250,21 +254,21 @@ class TestStreamingWarcWatcher:
 
         out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
         cfg = PipelineConfig(run_id="warc-stream")
-        q = run_warc_watcher_once(spark, str(wdir), out, ckpt, cfg)
+        q = drain()
         q.awaitTermination(120)
         ext = os.path.join(out, "extracted")
         n1 = spark.read.parquet(ext).count()
         assert n1 == 4
 
         # rerun, nothing new -> no duplicates (checkpoint tracking)
-        q = run_warc_watcher_once(spark, str(wdir), out, ckpt, cfg)
+        q = drain()
         q.awaitTermination(120)
         assert spark.read.parquet(ext).count() == n1
 
         # late file -> only its records are appended
         wdir.joinpath("f1.warc.gz").write_bytes(build_warc(
             [_rec("http://s.example.com/b/0", html)]))
-        q = run_warc_watcher_once(spark, str(wdir), out, ckpt, cfg)
+        q = drain()
         q.awaitTermination(120)
         df = spark.read.parquet(ext)
         assert df.count() == n1 + 1
